@@ -17,11 +17,13 @@ Layout:
     kernels/    pure Python/numpy compute kernels (no Spark imports) —
                 unit-testable, shared with the row-at-a-time oracle
     functions/  pandas/Arrow UDF wrappers around the kernels
-    operators/  DataFrame -> DataFrame stage implementations
-    sources/    readers + the parquet/manifest snapshot catalog seam
-    plans/      pipeline composition, resume, metrics
-    streaming/  Structured Streaming variants of the same schema
-    queries.py  the driver-contract inventory (SURVEY.md §2)
+    operators/  DataFrame -> DataFrame stage implementations, including
+                the fused quality pipeline (run_quality_pipeline)
+    inventory/  the registered query families (quality, dedup, streaming,
+                catalog, ...), each with its DuckDB oracle SQL
+    catalog.py  the parquet/manifest snapshot catalog (WAP, resume)
+    models.py   the trained langid / char-LM / automaton artifacts
+    queries.py  the driver-contract registry + the broadcast cache
     oracle.py   row-at-a-time reference-semantics oracle for parity tests
 """
 

@@ -83,7 +83,7 @@ def _signals(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def ql_gopher_rules(spark: SparkSession, sf: str) -> DataFrame:
-    """Gopher heuristics via pure built-ins (no UDF) — SURVEY.md §2.2."""
+    """Gopher heuristics over the structural-signal columns — SURVEY.md §2.2."""
     r = rules
     return _signals(spark, sf).select(
         "doc_id",
@@ -159,7 +159,7 @@ def ql_keep_drop(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def ql_repetition(spark: SparkSession, sf: str) -> DataFrame:
-    """Repetition signal: top word-bigram coverage (JVM HOFs, no UDF)."""
+    """Repetition signal: top word-bigram coverage."""
     return _signals(spark, sf).select(
         "doc_id", F.round("top2gram_frac", 6).alias("top2gram_frac")
     )
@@ -709,7 +709,7 @@ def _pipeline_full_oracle() -> str:
     # shifted-slice form below replaces the correlated UNNEST(range())
     # + per-position substring + lead() window, which DuckDB planned as
     # a delim join (95 s of operator time = 80% of the whole 106-query
-    # sweep's oracle wall; see tools/timings.json round 3).
+    # sweep's oracle wall, as timed by tools/time_queries.py).
     byte_expr = (
         "list_transform(regexp_extract_all(hex(encode(lower(txt))), '..'),"
         " x -> CAST(('0x' || x) AS BIGINT))"
@@ -976,9 +976,9 @@ def pipeline_incremental_ingest(spark: SparkSession, sf: str) -> DataFrame:
     over the whole fixture, which is exactly what the oracle computes.
 
     Scale shape: each run touches only its new batch (a day's crawl,
-    not the 10^12-row history); the gate is the codegen-only gopher
-    cascade; both catalogs are append-only manifest commits. Resume
-    cost is O(manifests), not O(data)."""
+    not the 10^12-row history); the gate is the gopher cascade over
+    with_structural_signals; both catalogs are append-only manifest
+    commits. Resume cost is O(manifests), not O(data)."""
     import tempfile
 
     from ..catalog import SnapshotCatalog

@@ -2,9 +2,11 @@
 
 This module is the single source of truth for every threshold and every
 signal definition. Three independent implementations consume it:
-  * the Spark built-in expression stage (operators/quality.py) — codegen'd,
-    no Python fence, evaluated BEFORE any UDF stage
-  * the pure-Python oracle (oracle.py)
+  * structural_reason_fast below — the fused pipeline kernel
+    (operators/quality.fused_pipeline_udf)
+  * the scalar structural_signals + structural_drop_reason pair — the
+    row-at-a-time oracle (oracle.py), also exposed as columns for the
+    ql_* inventory queries (operators/quality.with_structural_signals)
   * DuckDB oracle SQL for the driver-checked signal queries
 
 Signals follow the published Gopher (Rae et al. 2021, §A1.1) and C4
@@ -24,7 +26,6 @@ from collections import Counter
 
 # --- tokenization ---------------------------------------------------------
 TOKEN_SPLIT_PY = re.compile(r"[ \t\n\r\f\v]+")
-TOKEN_SPLIT_JAVA = "[ \\t\\n\\r\\f\\x0B]+"  # same class, Java regex syntax
 
 # --- thresholds (tuned on the synthetic corpus; structure per Gopher/C4) --
 MIN_WORDS = 50
@@ -89,8 +90,9 @@ def lines(text: str) -> list[str]:
 
 
 def structural_signals(text: str) -> dict[str, float]:
-    """Pure-Python reference implementation of every pre-UDF signal.
-    The Spark stage computes the same dict with built-in expressions."""
+    """Pure-Python reference implementation of every structural signal
+    (the oracle's path; with_structural_signals maps it over a column).
+    structural_reason_fast is the pipeline's disjoint twin."""
     toks = tokens(text)
     lns = lines(text)
     n_words = len(toks)

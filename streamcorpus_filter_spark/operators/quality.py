@@ -1,27 +1,25 @@
 """Quality-pipeline stages as DataFrame -> DataFrame operators.
 
-Scale design (SURVEY.md §4.2, the part Catalyst can't do for us): pandas
-UDFs are opaque fences, so the pipeline computes every STRUCTURAL signal
-with built-in JVM expressions first, drops the cheap-to-reject documents,
-and only survivors cross the (single, fused) Python fence for
-langid + perplexity + entity match + scrub. At Common-Crawl scale the
-majority of rejects (too short, boilerplate, repetition) never pay Arrow
-serialization.
+Scale design (SURVEY.md §4.2): the pipeline crosses into Python exactly
+once. fused_pipeline_udf runs extraction, the structural rules
+(rules.structural_reason_fast), langid, perplexity, entity match, PII
+scrub and toxicity in one scalar pandas UDF; a document dropped by a
+cheap structural rule short-circuits the later kernels inside the same
+batch. Only the final keep/drop cascade runs as JVM expressions.
 
-The structural expressions implement kernels/rules.py EXACTLY (same token
-class, same thresholds) — parity with the pure-Python oracle is tested at
-L2 (tests/test_quality_parity.py).
+with_structural_signals exposes the scalar rules.structural_signals
+values as columns for the ql_* inventory queries; their DuckDB oracles
+check it, and tests/test_quality_parity.py checks the pipeline against
+the row-at-a-time oracle.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import threading
-
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from ..kernels import rules
 from ..kernels.automaton import ACAutomaton
@@ -30,163 +28,40 @@ from ..kernels.extract import extract_text
 
 # ---------------------------------------------------------------- structure
 
+# rules.structural_signals keys -> Spark column types
+_SIGNAL_TYPES = {
+    "n_words": "bigint", "mean_word_len": "double",
+    "symbol_per_word": "double", "bullet_frac": "double",
+    "ellipsis_frac": "double", "alpha_frac": "double",
+    "n_stopwords": "bigint", "has_lorem": "boolean", "has_brace": "boolean",
+    "n_terminal": "double", "line_punct_frac": "double",
+    "dup_line_frac": "double", "top2gram_frac": "double",
+}
+_PANDAS_DTYPE = {"bigint": "int64", "boolean": "bool", "double": "float64"}
 
-def _tokens(col: Column) -> Column:
-    return F.filter(F.split(col, rules.TOKEN_SPLIT_JAVA), lambda x: x != "")
 
+def with_structural_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Adds every rules.structural_signals value as a column (one scalar
+    pandas UDF over ``text_col``). The pipeline never calls this — its
+    structural rules run inside fused_pipeline_udf — so it serves the
+    ql_* inventory queries, whose DuckDB oracles are the disjoint check."""
 
-def _lines(col: Column) -> Column:
-    return F.filter(F.split(col, "\n"), lambda x: x != "")
-
-
-def _count_occ(col: Column, lit: str) -> Column:
-    return (F.length(col) - F.length(F.replace(col, F.lit(lit), F.lit("")))) / len(lit)
-
-
-def with_structural_signals(
-    df: DataFrame, text_col: str = "text", lazy_top2: bool = False
-) -> DataFrame:
-    """Adds every rules.py structural signal as a column — built-ins only,
-    no Python fence. One pass; the token/line arrays are named subexprs.
-
-    ``lazy_top2=True`` computes the expensive top-bigram signal only for
-    rows that pass every cheaper cascade rule (CaseWhen evaluates lazily),
-    reporting 0.0 otherwise — the keep/drop cascade is unchanged because
-    ``rep_top2gram`` is the last rule, but rows already doomed by a cheap
-    rule skip the O(n log n) sort+scan. Use in the pipeline; keep False
-    when the raw signal value itself is the query output."""
-    # NULL text behaves like "" (-> gopher_short), matching the fused
-    # kernel and the row-at-a-time oracle: without the coalesce every
-    # signal goes NULL under ANSI mode, every cascade WHEN evaluates
-    # NULL, and the row silently KEEPS — the opposite verdict
-    c = F.coalesce(F.col(text_col), F.lit(""))
-    toks = _tokens(c)
-    lns = _lines(c)
-    df = df.withColumn("__sig_toks", toks).withColumn("__sig_lns", lns)
-    toks, lns = F.col("__sig_toks"), F.col("__sig_lns")
-    n_words = F.size(toks)
-    nw = F.greatest(n_words, F.lit(1)).cast("double")
-    n_lines = F.greatest(F.size(lns), F.lit(1)).cast("double")
-
-    sum_len = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
+    @F.pandas_udf(
+        "struct<" + ", ".join(f"{k}: {v}" for k, v in _SIGNAL_TYPES.items()) + ">"
     )
-    bullet = F.size(
-        F.filter(
-            lns,
-            lambda x: x.startswith("- ") | x.startswith("* ") | x.startswith("• "),
+    def signals(col: pd.Series) -> pd.DataFrame:
+        # NULL text behaves like "" (-> gopher_short), matching the fused
+        # kernel and the row-at-a-time oracle
+        sigs = [rules.structural_signals(t if isinstance(t, str) else "") for t in col]
+        return pd.DataFrame.from_records(sigs, columns=list(_SIGNAL_TYPES)).astype(
+            {k: _PANDAS_DTYPE[v] for k, v in _SIGNAL_TYPES.items()}
         )
-    )
-    ellipsis = F.size(
-        F.filter(lns, lambda x: x.endswith("...") | x.endswith("…"))
-    )
-    alpha = F.size(F.filter(toks, lambda x: x.rlike(r"\p{L}")))
-    # literal IN-list folds to Catalyst InSet (hash lookup); an F.array of
-    # literals would be rebuilt per element inside the lambda (~30x slower)
-    stops = F.size(
-        F.filter(toks, lambda x: F.lower(x).isin(*sorted(rules.STOPWORD_SET)))
-    )
-    n_terminal = sum(
-        [_count_occ(c, ch) for ch in rules.TERMINAL_PUNCT], F.lit(0).cast("double")
-    )
-    line_punct = F.size(
-        F.filter(
-            lns,
-            lambda x: x.endswith(".") | x.endswith("!") | x.endswith("?") | x.endswith("。"),
-        )
-    )
-    # top word-bigram frequency: sorted grams -> longest equal run (JVM HOFs).
-    # sequence(1, n) with n < 1 DESCENDS ([1, 0]) instead of being empty and
-    # element_at(toks, 0) throws — docs with < 2 words short-circuit to []
-    grams = F.when(
-        n_words >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n_words - 1),
-            lambda i: F.concat_ws(" ", F.element_at(toks, i), F.element_at(toks, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    top2 = F.aggregate(
-        F.sort_array(grams),
-        F.struct(
-            F.lit("").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")
-        ),
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            F.when(x == acc.prev, acc.run + 1).otherwise(F.lit(1)).alias("run"),
-            F.greatest(
-                acc.best, F.when(x == acc.prev, acc.run + 1).otherwise(F.lit(1))
-            ).alias("best"),
-        ),
-        lambda acc: acc.best,
-    )
 
-    out = (
-        df.withColumn("n_words", n_words.cast("long"))
-        .withColumn("mean_word_len", sum_len / nw)
-        .withColumn(
-            "symbol_per_word", (_count_occ(c, "#") + _count_occ(c, "...")) / nw
-        )
-        .withColumn("bullet_frac", bullet / n_lines)
-        .withColumn("ellipsis_frac", ellipsis / n_lines)
-        .withColumn("alpha_frac", alpha / nw)
-        .withColumn("n_stopwords", stops.cast("long"))
-        .withColumn("has_lorem", F.contains(F.lower(c), F.lit("lorem ipsum")))
-        .withColumn("has_brace", F.contains(c, F.lit("{")))
-        .withColumn("n_terminal", n_terminal)
-        .withColumn("line_punct_frac", line_punct / n_lines)
-        .withColumn(
-            "dup_line_frac",
-            (F.size(lns) - F.size(F.array_distinct(lns))) / n_lines,
-        )
-    )
-    top2_frac = F.lit(2.0) * top2 / nw
-    if lazy_top2:
-        top2_frac = F.when(_pre_top2_reason().isNull(), top2_frac).otherwise(
-            F.lit(0.0)
-        )
-    return out.withColumn("top2gram_frac", top2_frac).drop(
-        "__sig_toks", "__sig_lns"
-    )
+    df = df.withColumn("__sig", signals(F.col(text_col)))
+    return df.withColumns(
+        {n: F.col("__sig").getField(n) for n in _SIGNAL_TYPES}
+    ).drop("__sig")
 
-
-def _pre_top2_reason() -> Column:
-    """Cascade rules cheaper than rep_top2gram, first-drop-wins (evaluated
-    over the signal columns added by with_structural_signals)."""
-    r = rules
-    return (
-        F.when(F.col("n_words") < r.MIN_WORDS, "gopher_short")
-        .when(F.col("n_words") > r.MAX_WORDS, "gopher_long")
-        .when(
-            ~F.col("mean_word_len").between(r.MIN_MEAN_WORD_LEN, r.MAX_MEAN_WORD_LEN),
-            "gopher_word_len",
-        )
-        .when(F.col("symbol_per_word") > r.MAX_SYMBOL_TO_WORD, "gopher_symbol")
-        .when(F.col("bullet_frac") > r.MAX_BULLET_LINE_FRAC, "gopher_bullet")
-        .when(F.col("ellipsis_frac") > r.MAX_ELLIPSIS_LINE_FRAC, "gopher_ellipsis")
-        .when(F.col("alpha_frac") < r.MIN_ALPHA_WORD_FRAC, "gopher_alpha")
-        .when(F.col("n_stopwords") < r.MIN_STOPWORDS, "gopher_stopwords")
-        .when(F.col("has_lorem"), "c4_lorem")
-        .when(F.col("has_brace"), "c4_brace")
-        .when(F.col("n_terminal") < r.MIN_TERMINAL_PUNCT, "c4_sentences")
-        .when(F.col("line_punct_frac") < r.MIN_LINE_PUNCT_FRAC, "c4_line_punct")
-        .when(F.col("dup_line_frac") > r.MAX_DUP_LINE_FRAC, "rep_dup_lines")
-    )
-
-
-def structural_reason() -> Column:
-    """First-drop-wins cascade over the structural signal columns —
-    mirrors rules.structural_drop_reason (incl. rep_top2gram)."""
-    return F.coalesce(
-        _pre_top2_reason(),
-        F.when(F.col("top2gram_frac") > rules.MAX_TOP2GRAM_FRAC, "rep_top2gram"),
-    )
-
-
-SIGNAL_COLS = [
-    "n_words", "mean_word_len", "symbol_per_word", "bullet_frac",
-    "ellipsis_frac", "alpha_frac", "n_stopwords", "has_lorem", "has_brace",
-    "n_terminal", "line_punct_frac", "dup_line_frac", "top2gram_frac",
-]
 
 # ------------------------------------------------------------- fused kernel
 
@@ -210,10 +85,7 @@ def fused_pipeline_udf(bc_langid, bc_lm, bc_ent_ac, bc_tox_ac, from_html: bool):
     text column would cross the Arrow boundary anyway for the
     match/scrub stages. Only this one column crosses; structurally dropped
     rows short-circuit inside the kernel (null model fields, sreason set).
-    Models come from broadcasts, deserialized once per worker; the
-    JVM-built-in structural implementation lives on in
-    with_structural_signals() and is oracle-checked by the ql_* inventory
-    queries (inventory/quality.py).
+    Models come from broadcasts, deserialized once per worker.
     """
 
     @F.pandas_udf(FUSED_STRUCT)
@@ -313,43 +185,24 @@ def extract_fn(html_col: str = "html", out_col: str = "text"):
 
 # ------------------------------------------------------------- the pipeline
 
-_BC_CACHE: dict[str, object] = {}
-_BC_LOCK = threading.Lock()
-
-
 def _broadcast_models(spark: SparkSession):
-    """Broadcast the four model artifacts once per Spark application —
-    repeated pipeline invocations reuse the same broadcast ids instead of
-    re-pickling MBs of model arrays per call (and per-worker lazy
-    deserialization stays warm, since the broadcast id is what keys it).
-    Lock + destroy: two threads building pipelines on a fresh app must
-    not double-broadcast the several-MB arrays, and a process that
-    restarts sessions (test suites, notebooks) must not accumulate dead
-    apps' driver-side broadcast blocks."""
-    key = spark.sparkContext.applicationId
-    with _BC_LOCK:
-        if _BC_CACHE.get("app") != key:
-            from ..models import (
-                default_charlm,
-                default_langid,
-                pages_automaton,
-                toxic_automaton,
-            )
+    """The four model broadcasts, shared with the ql_* inventory queries
+    through queries.cached_broadcast (same keys, so one broadcast per
+    model per Spark application)."""
+    from ..models import (
+        default_charlm,
+        default_langid,
+        pages_automaton,
+        toxic_automaton,
+    )
+    from ..queries import cached_broadcast
 
-            for old in _BC_CACHE.get("bcs", ()):
-                try:
-                    old.destroy()
-                except Exception:
-                    pass  # prior app's context is already gone
-            sc = spark.sparkContext
-            _BC_CACHE["app"] = key
-            _BC_CACHE["bcs"] = (
-                sc.broadcast(default_langid()),
-                sc.broadcast(default_charlm()),
-                sc.broadcast(pages_automaton()),
-                sc.broadcast(toxic_automaton()),
-            )
-        return _BC_CACHE["bcs"]
+    return (
+        cached_broadcast(spark, "langid", default_langid),
+        cached_broadcast(spark, "charlm", default_charlm),
+        cached_broadcast(spark, "pages_ac", pages_automaton),
+        cached_broadcast(spark, "toxic_ac", toxic_automaton),
+    )
 
 
 def run_quality_pipeline(

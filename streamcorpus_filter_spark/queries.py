@@ -12,6 +12,7 @@ both sides so order-of-summation noise can't break the hash.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
@@ -43,20 +44,28 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
 
 _BC_CACHE: dict[tuple[str, str], object] = {}
+_BC_LOCK = threading.Lock()
 
 
 def cached_broadcast(spark: SparkSession, key: str, factory):
     """sc.broadcast(factory()) memoized per (application, key): repeated
-    query invocations reuse one broadcast id instead of re-pickling the
-    artifact per call — which also keeps executor-side lazy
-    deserialization warm (it is keyed by broadcast id)."""
+    query and pipeline invocations reuse one broadcast id instead of
+    re-pickling the artifact per call — which also keeps executor-side
+    lazy deserialization warm (it is keyed by broadcast id). The lock
+    stops two threads on a fresh application from broadcasting the same
+    several-MB artifact twice."""
     k = (spark.sparkContext.applicationId, key)
-    if k not in _BC_CACHE:
-        # drop entries from dead applications
-        for old in [x for x in _BC_CACHE if x[0] != k[0]]:
-            del _BC_CACHE[old]
-        _BC_CACHE[k] = spark.sparkContext.broadcast(factory())
-    return _BC_CACHE[k]
+    with _BC_LOCK:
+        if k not in _BC_CACHE:
+            # PySpark allows one active SparkContext per process, so a new
+            # application id means the old context was stopped: drop its
+            # entries. Never destroy() them — broadcast ids restart at 0 in
+            # the new context and destroy() resolves the id against the
+            # current one, deleting the new application's same-id broadcast.
+            for old in [x for x in _BC_CACHE if x[0] != k[0]]:
+                del _BC_CACHE[old]
+            _BC_CACHE[k] = spark.sparkContext.broadcast(factory())
+        return _BC_CACHE[k]
 
 
 # --------------------------------------------------------------------------

@@ -325,6 +325,8 @@ def test_null_and_empty_text_oracle_parity(spark, tmp_path):
         "ql_ac_match", "ql_classifier_score", "ql_threshold_sweep",
         "ql_boilerplate_scrub", "dedup_bloom", "udf_scalar_pandas",
         "udf_iter_pandas", "scan_csv", "scan_warc",
+        # the remaining callers of with_structural_signals' NULL -> ''
+        "ql_repetition", "ql_metrics_rollup",
     ):
         got = qs[name](spark, str(d)).toPandas()
         want = con.execute(os_[name]).df()

@@ -127,51 +127,71 @@ def test_drop_reason_distribution_sane(oracle_results):
         assert reasons.get(expected, 0) > 0, (expected, reasons)
 
 
-def test_spark_native_cascade_matches_kernel(spark, pages):
-    """The DataFrame-native structural cascade (with_structural_signals +
-    structural_reason — built-ins only, no Python fence) must agree with
-    kernels/rules.structural_drop_reason row-for-row, INCLUDING NULL text
-    (under ANSI mode a NULL text once made every cascade WHEN evaluate
-    NULL and the row silently KEEP — the opposite of the kernel's
-    gopher_short), and lazy_top2 must not change any verdict."""
-    import pyspark.sql.functions as F
-    from pyspark.sql.types import StringType, StructField, StructType
+_SHARED_BROADCAST_SCRIPT = r"""
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from pyspark import SparkContext
+from streamcorpus_filter_spark.kernels.langid import LangIdModel
+from streamcorpus_filter_spark.operators.quality import run_quality_pipeline
+from streamcorpus_filter_spark.queries import QUERIES
+from streamcorpus_filter_spark.session import get_spark
 
-    from streamcorpus_filter_spark.kernels import rules
-    from streamcorpus_filter_spark.kernels.extract import extract_text
-    from streamcorpus_filter_spark.operators.quality import (
-        structural_reason,
-        with_structural_signals,
+made = []  # (application id, broadcast id) of every LangIdModel broadcast
+_broadcast = SparkContext.broadcast
+
+def recording_broadcast(self, value):
+    bc = _broadcast(self, value)
+    if isinstance(value, LangIdModel):
+        made.append((self.applicationId, bc._jbroadcast.id()))
+    return bc
+
+SparkContext.broadcast = recording_broadcast
+
+def session():
+    s = get_spark(app_name="bc-cache", master="local[1]", shuffle_partitions=1)
+    pages = s.createDataFrame([("u", "some text")], "url string, text string")
+    run_quality_pipeline(s, pages, min_partitions=1)
+    QUERIES["ql_langid"](s, sys.argv[2])
+    run_quality_pipeline(s, pages, min_partitions=1)
+    return s
+
+s = session()
+first = list(made)
+s.stop()
+s = get_spark(app_name="bc-cache", master="local[1]", shuffle_partitions=1)
+own = s.sparkContext.broadcast("own")  # same id as a stopped-app entry
+s = session()
+alive = s.sparkContext.parallelize([0], 1).map(lambda _: own.value).collect()
+print(json.dumps({"first": first, "all": made, "alive": alive,
+                  "app": s.sparkContext.applicationId}))
+s.stop()
+"""
+
+
+def test_pipeline_and_queries_share_one_model_broadcast(tmp_path):
+    """One broadcast cache: within an application the pipeline and the
+    ql_langid query reuse ONE langid broadcast (not one per code path).
+    After spark.stop() a new application broadcasts afresh instead of
+    reusing a stopped context's broadcast, and retiring the stopped
+    application's entries leaves the new one's broadcasts readable
+    (ids restart at 0 per context). Runs in its own process: it stops
+    its session, which would kill the suite's shared one."""
+    import json
+    import pathlib
+    import subprocess
+    import sys
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    r = subprocess.run(
+        [sys.executable, "-c", _SHARED_BROADCAST_SCRIPT, str(repo),
+         "/root/testdata/sf0.001"],
+        capture_output=True, text=True, timeout=600, cwd=tmp_path,
     )
-
-    texts = [extract_text(h) for h in pages["html"][:400]]
-    texts.append(None)  # the ANSI NULL regression
-    texts.append("")
-    want = [
-        rules.structural_drop_reason(
-            rules.structural_signals(t if t is not None else "")
-        )
-        for t in texts
-    ]
-    from pyspark.sql.types import LongType
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)],
-        StructType([
-            StructField("i", LongType()),
-            StructField("text", StringType()),
-        ]),
-    )
-    for lazy in (False, True):
-        got = (
-            with_structural_signals(df, lazy_top2=lazy)
-            .withColumn("reason", structural_reason())
-            .select("i", "reason")
-            .collect()
-        )
-        by_i = {r["i"]: r["reason"] for r in got}
-        mismatches = [
-            (i, by_i[i], want[i]) for i in range(len(texts))
-            if by_i[i] != want[i]
-        ]
-        assert not mismatches, (lazy, mismatches[:5])
+    assert r.returncode == 0, r.stderr[-3000:]
+    out = json.loads(r.stdout.strip().splitlines()[-1])
+    first = [tuple(x) for x in out["first"]]
+    made = [tuple(x) for x in out["all"]]
+    assert len(first) == 1, first
+    assert len(made) == 2, made
+    assert made[1][0] == out["app"] != first[0][0], made
+    assert out["alive"] == ["own"]
