@@ -31,12 +31,12 @@ cores per executor, the task brief's sanctioned "N and 4N cores"
 reading, isolating the plan's own scaling from the JVM-count
 artifact.
 
-What every level proves beyond run_scaling.py: (a) the --py-files
-zip is complete (driver cwd is a scratch dir, so the package can
-ONLY resolve from the zip); (b) the job runs on real multi-process
-executors (worker-reported distinct parent PIDs, asserted); (c) the
-spark-submit-provided master is honored end-to-end (the session
-factory defers to the launcher — regression-tested in
+What every level proves beyond bench.py's local[N] scaling rounds:
+(a) the --py-files zip is complete (driver cwd is a scratch dir, so
+the package can ONLY resolve from the zip); (b) the job runs on real
+multi-process executors (worker-reported distinct parent PIDs,
+asserted); (c) the spark-submit-provided master is honored end-to-end
+(the session factory defers to the launcher — regression-tested in
 tests/test_spark_submit.py).
 
 Usage:  python BENCH/run_executor_scaling.py [--passes 3] [--repeat 3]
@@ -113,8 +113,7 @@ def main() -> None:
 
     import bench
 
-    bench.PAGES_PER_SF = int(args.pages / 0.1)
-    pages_path = bench.pages_parquet(0.1)
+    pages_path = bench.pages_parquet(0.1, args.pages)
 
     with tempfile.TemporaryDirectory(prefix="execdemo-") as td:
         scratch = pathlib.Path(td)
