@@ -80,20 +80,16 @@ def main() -> None:
     n_pages = pages.count()
 
     # warm: fork + model-load + JIT every executor's python workers
-    warm = pages.limit(args.slots * 100)
+    warm = pages.limit(args.slots * 100).repartition(args.slots)
     for _ in range(2):
-        force(run_quality_pipeline(
-            spark, warm, extract_from_html=True, min_partitions=args.slots
-        ))
+        force(run_quality_pipeline(spark, warm, extract_from_html=True))
 
     walls: list[float] = []
     controls: list[float] = []
     for _ in range(args.repeat):
         controls.append(control_wall())
         t0 = time.perf_counter()
-        force(run_quality_pipeline(
-            spark, pages, extract_from_html=True, min_partitions=1
-        ))
+        force(run_quality_pipeline(spark, pages, extract_from_html=True))
         walls.append(time.perf_counter() - t0)
 
     # proof of multi-process execution: each python worker reports its

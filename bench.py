@@ -152,13 +152,7 @@ def _make_bench(spark, sf_dir: str, pages_path: str):
         pages = spark.read.parquet(pages_path)
         if state["n_pages"] is None:
             state["n_pages"] = pages.count()
-        # min_partitions=1: the multi-file corpus already scans at full
-        # parallelism — forcing a repartition would shuffle every html
-        # byte for nothing
-        out = run_quality_pipeline(
-            spark, pages, extract_from_html=True, min_partitions=1
-        )
-        force(out)
+        force(run_quality_pipeline(spark, pages, extract_from_html=True))
 
     def q_flagship():
         force(reg.QUERIES["flagship_filter_agg"](spark, sf_dir))
@@ -237,12 +231,9 @@ def run_level(
         # python worker forks + loads models + JITs before the timed run
         # (measured: run0 ~4x steady-state, run1 ~1.5x, run2+ steady)
         warm = spark.read.parquet(pages_path).limit(cores * 100)
+        warm = warm.repartition(cores)
         for _ in range(2):
-            force(
-                run_quality_pipeline(
-                    spark, warm, extract_from_html=True, min_partitions=cores
-                )
-            )
+            force(run_quality_pipeline(spark, warm, extract_from_html=True))
         # page count resolved HERE so the first timed sample is not
         # inflated by a count() job (with repeats=2 in the scaling
         # windows that polluted half of every window's samples)

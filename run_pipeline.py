@@ -259,8 +259,9 @@ def run(
             out["settled"] = settled
         return out
 
-    # lineage BEFORE any repartition/shuffle (input_file_name() is empty
-    # after an exchange); partition_id is the post-shuffle task partition.
+    # lineage at the scan (input_file_name() is empty after an
+    # exchange); the pipeline adds no exchange, so partition_id is the
+    # scan split that read the row.
     from streamcorpus_filter_spark.operators.quality import run_quality_pipeline
 
     # basePath keeps directory-encoded partition columns of the input
@@ -300,19 +301,20 @@ def run(
     metrics = obs.get
     violations = _audit_metrics(metrics, min_keep_ratio)
     if violations:
+        head = None
         try:
             cat.abort_staged(staged["snapshot_id"])
         except ValueError:
-            # a concurrent run's settle pass already re-audited and
-            # DECIDED this batch (the catalog verbs converge races to
-            # one outcome); report the decision instead of crashing —
-            # with the threshold persisted above, its audit verdict
-            # matches ours, so this arm is publish-vs-abort of the
-            # same conclusion racing, not a disagreement
-            pass
+            # a concurrent run's settle pass already DECIDED this batch
+            # (the catalog verbs converge races to one outcome); report
+            # its decision instead of crashing. With the threshold
+            # persisted above it aborts too, but a racer on a manifest
+            # without it (or on older code) may have published: the
+            # rows are then visible table state, not "aborted"
+            head = cat._published_head(staged["snapshot_id"], cat.snapshots())
         result = {
-            "status": "aborted",
-            "snapshot": None,
+            "status": "aborted" if head is None else "committed",
+            "snapshot": None if head is None else head["snapshot_id"],
             "input_files": len(todo),
             "violations": violations,
             "metrics": metrics,

@@ -38,5 +38,7 @@ def extract_text(html_bytes: bytes | None) -> str:
     s = _BLOCK_TAG_RE.sub("\n", s)
     s = _TAG_RE.sub(" ", s)
     s = _htmllib.unescape(s)
-    lines = [_HWS_RE.sub(" ", ln).strip() for ln in s.split("\n")]
+    # one pass over the whole string: the class excludes \n, so no run
+    # crosses a line and the lines equal a per-line substitution
+    lines = (ln.strip() for ln in _HWS_RE.sub(" ", s).split("\n"))
     return "\n".join(ln for ln in lines if ln)

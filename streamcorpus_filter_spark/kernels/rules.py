@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import re
 from collections import Counter
+from itertools import filterfalse
 
 # --- tokenization ---------------------------------------------------------
 TOKEN_SPLIT_PY = re.compile(r"[ \t\n\r\f\v]+")
@@ -159,12 +160,15 @@ def structural_reason_fast(text: str) -> str | None:
         return "gopher_bullet"
     if sum(1 for ln in lns if ln.endswith(ELLIPSIS_SUFFIXES)) / n_lines > MAX_ELLIPSIS_LINE_FRAC:
         return "gopher_ellipsis"
-    # t.isalpha() short-circuits the char scan for the overwhelmingly
-    # common pure-letter token; the fallback is the SAME predicate the
-    # scalar spec uses (any(c.isalpha())), not a regex class — Python's
-    # [^\W\d_] also matches \w-but-not-alpha chars (superscripts like
-    # '²', No/Nl numerics), which would silently diverge from the spec
-    alpha = sum(1 for t in toks if t.isalpha() or any(map(str.isalpha, t)))
+    # count the complement: filterfalse(str.isalpha) skips the
+    # overwhelmingly common pure-letter token in C, and only the rest pay
+    # the char scan. That scan is the SAME predicate the scalar spec uses
+    # (any(c.isalpha())), not a regex class — Python's [^\W\d_] also
+    # matches \w-but-not-alpha chars (superscripts like '²', No/Nl
+    # numerics), which would silently diverge from the spec
+    alpha = n_words - sum(
+        1 for t in filterfalse(str.isalpha, toks) if not any(map(str.isalpha, t))
+    )
     if alpha / nw < MIN_ALPHA_WORD_FRAC:
         return "gopher_alpha"
     # the rule only needs "are there >= MIN_STOPWORDS" — stop counting at

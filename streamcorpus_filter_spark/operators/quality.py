@@ -71,6 +71,11 @@ FUSED_STRUCT = (
     "scrubbed_text: string, bytes_scrubbed: bigint, tox_hits: int>"
 )
 
+# rows per kernel call inside one Arrow batch: langid's count matrices
+# cost ~0.18 MB per surviving doc, so a whole 4,096-row batch of
+# survivors would hold ~0.5 GB per Python worker
+KERNEL_BLOCK_ROWS = 512
+
 
 def fused_pipeline_udf(bc_langid, bc_lm, bc_ent_ac, bc_tox_ac, from_html: bool):
     """THE pipeline fence: one scalar pandas UDF (html|text) -> struct with
@@ -85,11 +90,28 @@ def fused_pipeline_udf(bc_langid, bc_lm, bc_ent_ac, bc_tox_ac, from_html: bool):
     text column would cross the Arrow boundary anyway for the
     match/scrub stages. Only this one column crosses; structurally dropped
     rows short-circuit inside the kernel (null model fields, sreason set).
-    Models come from broadcasts, deserialized once per worker.
+    Models come from broadcasts, deserialized once per worker. Each
+    Arrow batch is processed in blocks of at most KERNEL_BLOCK_ROWS rows
+    whose frames are concatenated; every kernel is per-doc except
+    langid, whose ``lang_conf`` may move by a few ulps with the block's
+    row count (BLAS summation order), never its ``lang_pred``.
     """
 
     @F.pandas_udf(FUSED_STRUCT)
     def fn(col: pd.Series) -> pd.DataFrame:
+        # the Arrow batch sets the fence crossings, the block the
+        # kernels' working set
+        if len(col) <= KERNEL_BLOCK_ROWS:
+            return block(col)
+        return pd.concat(
+            [
+                block(col.iloc[i : i + KERNEL_BLOCK_ROWS])
+                for i in range(0, len(col), KERNEL_BLOCK_ROWS)
+            ],
+            ignore_index=True,
+        )
+
+    def block(col: pd.Series) -> pd.DataFrame:
         langid = bc_langid.value
         lm = bc_lm.value
         ent_ac: ACAutomaton = bc_ent_ac.value
@@ -209,38 +231,26 @@ def run_quality_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     extract_from_html: bool = False,
-    min_partitions: int | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> filtered rows with
     keep/drop_reason/scrubbed_text/metrics columns (FILTERED-like schema,
     minus the heavy html column).
 
-    Plan shape (the 100TB story) — ONE linear plan, no branch/union (a
-    filter-split would re-run the scan + extraction once per branch), and
-    ONE Arrow fence (only the html-or-text column crosses into Python;
-    see fused_pipeline_udf for the measured built-ins-vs-kernel call):
+    Plan shape (the 100TB story) — ONE linear stage, no branch/union (a
+    filter-split would re-run the scan + extraction once per branch), no
+    exchange (the fat html/text rows are never shuffled: each scan split
+    is one task), and ONE Arrow fence (only the html-or-text column
+    crosses into Python; see fused_pipeline_udf for the measured
+    built-ins-vs-kernel call):
       scan -> fused fence (extract -> structural -> langid/ppl/match/
            scrub, early-exit on structural drop) -> final keep/drop
            cascade (JVM CaseWhen)
 
-    ``min_partitions``: input with fewer partitions than this is
-    repartitioned before the heavy stages (defaults to
-    ``2 * sc.defaultParallelism`` — 2-3 tasks per core evens out the
-    heavy doc-length tail). A real Common-Crawl-scale table already has
-    thousands of file-splits, so the guard only fires on small/test
-    inputs. Caveat: getNumPartitions reports SPLITS, and a parquet row
-    group is the true minimum split unit — a single-row-group file scans
-    as one task no matter what this reports, so test fixtures must be
-    written with real row groups (synth.write_pages_parquet does).
+    Parallelism is the input's split count. A caller that wants more
+    tasks than its input has splits repartitions ``pages`` itself and
+    pays that shuffle explicitly.
     """
-    sc = spark.sparkContext
     bc_lang, bc_lm, bc_ent, bc_tox = _broadcast_models(spark)
-
-    want = (
-        min_partitions if min_partitions is not None else 2 * sc.defaultParallelism
-    )
-    if pages.rdd.getNumPartitions() < want:
-        pages = pages.repartition(want)
 
     in_col = "html" if extract_from_html else "text"
     # every non-payload column (url, warc_ts, lang, plus any caller-added

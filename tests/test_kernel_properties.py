@@ -160,3 +160,62 @@ def test_containment_cross_multiply_equals_ratio(inter, sz):
 
     assert (inter * 10 >= 9 * sz) == (Fraction(inter, sz) >= Fraction(9, 10))
 
+
+# inputs for the two exact kernel trims: whitespace — the ASCII class
+# members, plus characters str.strip()/str.split() know but the regex
+# classes do not (\xa0, \x85, U+3000, U+2028) — and words mixing
+# letters with \w-but-not-alpha characters (superscripts, No/Nl numerics)
+_WS = [" ", "\t", "\r", "\f", "\v", "\n", "\xa0", "\x85", "\u3000", "\u2028"]
+_WORDS = ["the", "word", "é", "ß", "壹", "x²", "²³", "123", "½", "Ⅳ", "a1"]
+
+
+def _extract_per_line(html_bytes: bytes | None) -> str:
+    """extract_text as it was: horizontal whitespace canonicalized one
+    line at a time."""
+    import html as htmllib
+
+    from streamcorpus_filter_spark.kernels import extract as ex
+
+    if not html_bytes:
+        return ""
+    s = html_bytes.decode("utf-8", errors="replace")
+    s = ex._COMMENT_RE.sub(" ", s)
+    s = ex._SCRIPT_STYLE_RE.sub(" ", s)
+    s = ex._BLOCK_TAG_RE.sub("\n", s)
+    s = ex._TAG_RE.sub(" ", s)
+    s = htmllib.unescape(s)
+    lines = [ex._HWS_RE.sub(" ", ln).strip() for ln in s.split("\n")]
+    return "\n".join(ln for ln in lines if ln)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.sampled_from(
+    _WS + _WORDS + ["<p>", "</div>", "<br/>", "<b>", "&nbsp;", "&amp;", "&#x85;"]
+), max_size=80).map("".join))
+def test_extract_whole_string_whitespace_pass_matches_per_line(doc):
+    from streamcorpus_filter_spark.kernels.extract import extract_text
+
+    data = doc.encode("utf-8")
+    assert extract_text(data) == _extract_per_line(data)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.tuples(st.sampled_from(_WORDS), st.sampled_from(_WS)),
+                min_size=50, max_size=160)
+       .map(lambda pairs: "".join(w + sep for w, sep in pairs)))
+def test_fast_alpha_rule_matches_per_token_count(text):
+    """structural_reason_fast counts alpha tokens by their complement;
+    its gopher_alpha decision must equal the per-token count it
+    replaced, and its reason the scalar spec's."""
+    from streamcorpus_filter_spark.kernels import rules
+
+    got = rules.structural_reason_fast(text)
+    assert got == rules.structural_drop_reason(rules.structural_signals(text))
+    earlier = rules.DROP_ORDER[: rules.DROP_ORDER.index("gopher_alpha")]
+    if got in earlier:
+        return
+    toks = rules._TOKEN_RE.findall(text)
+    alpha = sum(1 for t in toks if t.isalpha() or any(map(str.isalpha, t)))
+    assert (got == "gopher_alpha") == (
+        alpha / len(toks) < rules.MIN_ALPHA_WORD_FRAC
+    )

@@ -127,6 +127,58 @@ def test_drop_reason_distribution_sane(oracle_results):
         assert reasons.get(expected, 0) > 0, (expected, reasons)
 
 
+def test_fused_body_caps_each_kernel_call_at_block_rows(spark, monkeypatch):
+    """The fused body walks an Arrow batch in blocks: langid and both
+    automata never see more than KERNEL_BLOCK_ROWS docs in one call (the
+    bound on langid's dense count matrices), and the batch's frame is
+    exactly the concatenation of the per-block frames. The body runs
+    in-process; the session only has to exist for pandas_udf."""
+    import pandas as pd
+
+    from streamcorpus_filter_spark import models
+    from streamcorpus_filter_spark.kernels.automaton import ACAutomaton
+    from streamcorpus_filter_spark.kernels.langid import LangIdModel
+    from streamcorpus_filter_spark.operators.quality import (
+        KERNEL_BLOCK_ROWS,
+        fused_pipeline_udf,
+    )
+
+    calls: list[tuple[str, int]] = []
+
+    def spy(cls, name):
+        real = getattr(cls, name)
+
+        def recorded(self, texts):
+            calls.append((name, len(texts)))
+            return real(self, texts)
+
+        monkeypatch.setattr(cls, name, recorded)
+
+    spy(LangIdModel, "score_batch")
+    spy(ACAutomaton, "count_batch")
+    spy(ACAutomaton, "search_batch")
+
+    class Broadcast:  # the body only reads .value
+        def __init__(self, value):
+            self.value = value
+
+    body = fused_pipeline_udf(
+        Broadcast(models.default_langid()), Broadcast(models.default_charlm()),
+        Broadcast(models.pages_automaton()), Broadcast(models.toxic_automaton()),
+        from_html=True,
+    ).func
+    col = pd.Series(make_pages(2000, seed=7)["html"], dtype=object)
+    got = body(col)
+    assert len(got) == 2000
+    assert {n for n, _ in calls} == {"score_batch", "count_batch", "search_batch"}
+    assert max(k for _, k in calls) <= KERNEL_BLOCK_ROWS, calls
+    blocks = [
+        body(col.iloc[i : i + KERNEL_BLOCK_ROWS])
+        for i in range(0, len(col), KERNEL_BLOCK_ROWS)
+    ]
+    pd.testing.assert_frame_equal(got, pd.concat(blocks, ignore_index=True))
+
+
 _SHARED_BROADCAST_SCRIPT = r"""
 import json, sys
 sys.path.insert(0, sys.argv[1])
@@ -150,9 +202,9 @@ SparkContext.broadcast = recording_broadcast
 def session():
     s = get_spark(app_name="bc-cache", master="local[1]", shuffle_partitions=1)
     pages = s.createDataFrame([("u", "some text")], "url string, text string")
-    run_quality_pipeline(s, pages, min_partitions=1)
+    run_quality_pipeline(s, pages)
     QUERIES["ql_langid"](s, sys.argv[2])
-    run_quality_pipeline(s, pages, min_partitions=1)
+    run_quality_pipeline(s, pages)
     return s
 
 s = session()

@@ -242,6 +242,37 @@ def test_poisoned_batch_aborts_and_stays_invisible(spark, pages_dir, tmp_path):
     assert r4["status"] == "up-to-date"
 
 
+def test_abort_lost_to_a_publishing_racer_reports_committed(
+    spark, tmp_path, monkeypatch
+):
+    """A poisoned batch whose abort loses the race to a racer that
+    PUBLISHED it (a settle pass on older code or a threshold-less
+    manifest): the rows are visible table state, so the run must report
+    the racer's outcome — committed, with the head's id — not claim the
+    batch was aborted."""
+    d = tmp_path / "in"
+    d.mkdir()
+    _poison_chunk(str(d / "poison.parquet"))
+    table = str(tmp_path / "t")
+
+    real_abort = SnapshotCatalog.abort_staged
+
+    def racing_abort(self, sid):
+        self.publish(sid)  # the racer decides first
+        return real_abort(self, sid)
+
+    monkeypatch.setattr(SnapshotCatalog, "abort_staged", racing_abort)
+    r = run(spark, str(d), table, from_html=True, min_keep_ratio=0.2)
+
+    cat = SnapshotCatalog(table)
+    head = cat.latest_snapshot()
+    assert head["metrics"]["published_from"]
+    assert r["status"] == "committed"
+    assert r["snapshot"] == head["snapshot_id"]
+    assert r["violations"]
+    assert cat.read(spark).count() == 60
+
+
 def test_null_url_batch_always_aborts(spark, tmp_path):
     """The null-url audit needs no threshold: key loss is corruption."""
     import pyarrow as pa

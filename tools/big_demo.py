@@ -172,7 +172,7 @@ def run_demo(n_pages: int, cores: int) -> dict:
     # even after slice warmups), then the timed pass. A 100TB job
     # amortizes that cold cost in its first seconds.
     pipe = lambda: run_quality_pipeline(  # noqa: E731
-        spark, pages, extract_from_html=True, min_partitions=cores
+        spark, pages, extract_from_html=True
     )
     force(pipe())
     # best-of-2 timed passes: the sandbox VM's host-steal bursts swing
