@@ -109,42 +109,40 @@ def _audit_metrics(metrics: dict, min_keep_ratio: float) -> list[str]:
     return violations
 
 
-def _fold_metrics(table: str, manifest: dict, metrics: dict) -> None:
-    """Rewrite a committed manifest with observed metrics folded in —
-    via tmp + os.rename, mirroring SnapshotCatalog.append's commit
-    protocol: a crash mid-rewrite must not leave truncated JSON (which
-    would break every later snapshots()/processed_inputs() read)."""
-    mpath = pathlib.Path(table) / "snapshots" / f"{manifest['sequence']:08d}.json"
-    manifest["metrics"] = {**manifest.get("metrics", {}), **metrics}
-    mtmp = mpath.with_name(f".tmp-metrics-{manifest['snapshot_id']}")
-    mtmp.write_text(json.dumps(manifest, indent=2))
-    os.rename(mtmp, mpath)
+def _batch_rows(spark, cat, manifest: dict):
+    """One committed batch's rows (staged or published), read from its
+    data dir under the manifest schema. The schema makes the read total
+    even for a ZERO-row batch (an empty batch publishes by design so
+    --resume stops re-feeding its files, but Spark writes it as _SUCCESS
+    with no footers — a schemaless read would throw and, worse, the
+    settle heal loop would then retry the throw on every later run
+    forever)."""
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromJson(json.loads(manifest["schema_json"]))
+    return spark.read.schema(schema).parquet(cat._data_dir(manifest))
 
 
 def _write_lineage(spark, cat, table: str, head: dict) -> None:
     """Per-input-file lineage metrics table (tiny; one row per input
     file), re-read from the published snapshot's data dir — cheaper
-    than re-running the pipeline for a second aggregation pass."""
+    than re-running the pipeline for a second aggregation pass.
+
+    Spark writes into a unique temp dir beside ``metrics/<id>`` that is
+    then renamed into place, so two settlers healing the same head never
+    write into (or clear) each other's in-flight output: the first
+    rename lands a complete dir, and a later one finds ``_SUCCESS``
+    there and drops its own copy."""
     import shutil
+    import uuid
 
     import pyspark.sql.functions as F
-    from pyspark.sql.types import StructType
 
     mdir = pathlib.Path(table) / "metrics" / head["snapshot_id"]
     if (mdir / "_SUCCESS").exists():
         return  # settle retry after a crash mid-lineage-write
-    if mdir.exists():
-        # crash mid-write left a partial dir (_temporary, no _SUCCESS):
-        # clear it so the rewrite below can commit cleanly
-        shutil.rmtree(mdir)
-    # the manifest schema makes the read total even for a ZERO-row
-    # published batch (an empty batch publishes by design so --resume
-    # stops re-feeding its files, but Spark writes it as _SUCCESS with
-    # no footers — a schemaless read would throw and, worse, the settle
-    # heal loop would then retry the throw on every later run forever)
-    schema = StructType.fromJson(json.loads(head["schema_json"]))
     lineage = (
-        spark.read.schema(schema).parquet(cat._data_dir(head))
+        _batch_rows(spark, cat, head)
         .groupBy("input_file")
         .agg(
             F.count(F.lit(1)).alias("docs_seen"),
@@ -155,7 +153,20 @@ def _write_lineage(spark, cat, table: str, head: dict) -> None:
         )
         .withColumn("snapshot_id", F.lit(head["snapshot_id"]))
     )
-    lineage.coalesce(1).write.mode("errorifexists").parquet(str(mdir))
+    tmp = mdir.with_name(f".tmp-{mdir.name}-{uuid.uuid4().hex[:8]}")
+    lineage.coalesce(1).write.mode("errorifexists").parquet(str(tmp))
+    try:
+        os.rename(tmp, mdir)
+    except OSError:
+        if (mdir / "_SUCCESS").exists():
+            shutil.rmtree(tmp, ignore_errors=True)  # a racer landed first
+            return
+        # a partial dir (no _SUCCESS) from a writer that wrote in place
+        # and died: move it aside, then land ours
+        stale = tmp.with_name(f"{tmp.name}-stale")
+        os.rename(mdir, stale)
+        shutil.rmtree(stale)
+        os.rename(tmp, mdir)
 
 
 def _settle_pending(spark, cat, table: str, min_keep_ratio: float) -> list[dict]:
@@ -165,16 +176,11 @@ def _settle_pending(spark, cat, table: str, min_keep_ratio: float) -> list[dict]
     re-feeding the files — silent data loss. The staged rows are
     durable, so the audit re-runs from THEM (one aggregation scan),
     then the idempotent publish/abort lands the decision."""
-    import pyspark.sql.functions as F
-
     settled = []
-    for s in cat.snapshots():
-        if s.get("operation") != "staged":
-            continue
+    for s in cat._staged():
         if "pipeline_wap" not in s.get("metrics", {}):
             continue  # someone else's staged batch: not ours to decide
-        df = cat._read_snapshots(spark, [s])
-        m = df.select(*_audit_aggs()).first().asDict()
+        m = _batch_rows(spark, cat, s).select(*_audit_aggs()).first().asDict()
         # re-audit with the threshold the ORIGINAL run staged the batch
         # under (it rides in the staged metrics): settling with the
         # NEXT invocation's flag — possibly the 0.0 default of an
@@ -189,8 +195,7 @@ def _settle_pending(spark, cat, table: str, min_keep_ratio: float) -> list[dict]
                 "violations": violations,
             })
         else:
-            _fold_metrics(table, s, m)
-            head = cat.publish(s["snapshot_id"])
+            head = cat.publish(s["snapshot_id"], metrics=m)
             _write_lineage(spark, cat, table, head)
             settled.append({
                 "snapshot": head["snapshot_id"], "decision": "published",
@@ -200,7 +205,7 @@ def _settle_pending(spark, cat, table: str, min_keep_ratio: float) -> list[dict]
     # above, so a crash between publish() and _write_lineage() would
     # otherwise strand the published snapshot without its lineage
     # side-table forever (_write_lineage is idempotent via _SUCCESS)
-    for s in cat.snapshots():
+    for s in cat._visible():
         m = s.get("metrics", {})
         if "pipeline_wap" not in m or "published_from" not in m:
             continue
@@ -241,10 +246,7 @@ def run(
     from streamcorpus_filter_spark.catalog import SnapshotCatalog
 
     cat = SnapshotCatalog(table)
-    settled = (
-        _settle_pending(spark, cat, table, min_keep_ratio)
-        if cat.snapshots() else []
-    )
+    settled = _settle_pending(spark, cat, table, min_keep_ratio)
 
     candidates = sorted(spark.read.parquet(input_path).inputFiles())
     todo = candidates
@@ -311,7 +313,7 @@ def run(
             # persisted above it aborts too, but a racer on a manifest
             # without it (or on older code) may have published: the
             # rows are then visible table state, not "aborted"
-            head = cat._published_head(staged["snapshot_id"], cat.snapshots())
+            head = cat._published_head(staged["snapshot_id"])
         result = {
             "status": "aborted" if head is None else "committed",
             "snapshot": None if head is None else head["snapshot_id"],
@@ -323,11 +325,8 @@ def run(
             result["settled"] = settled
         return result
 
-    # fold observed metrics into the STAGED manifest first: publish
-    # inherits staged metrics into the head, so they survive on the
-    # published manifest without a second rewrite
-    _fold_metrics(table, staged, metrics)
-    head = cat.publish(staged["snapshot_id"])
+    # the observed metrics ride in the published head's commit
+    head = cat.publish(staged["snapshot_id"], metrics=metrics)
     _write_lineage(spark, cat, table, head)
 
     result = {
@@ -346,7 +345,7 @@ def main() -> None:
     ap.add_argument("--input", help="pages parquet dir (url, warc_ts, html, text, lang)")
     ap.add_argument("--table", help="output catalog root")
     ap.add_argument("--resume", action="store_true",
-                    help="skip input files recorded in existing snapshots")
+                    help="skip input files the table's lineage already records")
     ap.add_argument("--from-html", action="store_true",
                     help="re-extract text from the html column")
     ap.add_argument("--partition-by", default="keep",

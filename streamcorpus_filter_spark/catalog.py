@@ -44,7 +44,8 @@ Only this module would change; pipeline code is catalog-agnostic.
 Reference analog: streamcorpus-filter wrote output chunk files and relied
 on the scheduler to not re-feed processed chunks [RECALL, SURVEY.md §3.1];
 the manifest makes that bookkeeping explicit and transactional-ish
-(manifest written atomically via rename, after data files are flushed).
+(the manifest commits last, after the data files are flushed, by claiming
+its sequence-numbered file name with os.link).
 """
 
 from __future__ import annotations
@@ -52,6 +53,8 @@ from __future__ import annotations
 import json
 import os
 import pathlib
+import re
+import shutil
 import time
 import uuid
 
@@ -106,6 +109,61 @@ class SnapshotCatalog:
                 continue  # same vanish tolerance as snapshots()
         return None
 
+    def _manifest_path(self, sequence: int) -> pathlib.Path:
+        return self.root / "snapshots" / f"{sequence:08d}.json"
+
+    def _unlink(self, manifest: dict) -> None:
+        """Remove a committed manifest; one already gone is fine (racing
+        healers unlink the same loser)."""
+        self._manifest_path(manifest["sequence"]).unlink(missing_ok=True)
+
+    def _visible(self, snaps: list[dict] | None = None) -> list[dict]:
+        """Main-table manifests in sequence order: everything but staged
+        batches, abort tombstones and branch commits."""
+        return [
+            s for s in (snaps if snaps is not None else self.snapshots())
+            if s.get("operation") not in self._NON_MAIN_OPS
+        ]
+
+    def _staged(self, snaps: list[dict] | None = None) -> list[dict]:
+        """Staged batches awaiting their audit decision, in sequence
+        order."""
+        return [
+            s for s in (snaps if snaps is not None else self.snapshots())
+            if s.get("operation") == "staged"
+        ]
+
+    @staticmethod
+    def _manifest(
+        operation: str,
+        data_dir: str = "",
+        input_files: list[str] | None = None,
+        metrics: dict | None = None,
+        source: dict | None = None,
+        snapshot_id: str | None = None,
+    ) -> dict:
+        """The one manifest constructor. ``sequence`` and ``parent_id``
+        are placeholders the commit loop assigns; the table layout
+        (``partition_by``, ``bucket_spec``, ``schema_json``) is copied
+        from ``source`` — the manifest whose data or fork point this one
+        describes — and is empty without one. A manifest without a data
+        dir (tombstone, branch marker, rollback) has no file layout, so
+        it never carries a ``bucket_spec``."""
+        src = source or {}
+        return {
+            "sequence": -1,
+            "snapshot_id": snapshot_id or uuid.uuid4().hex[:16],
+            "parent_id": None,
+            "committed_at": time.time(),
+            "operation": operation,
+            "data_dir": data_dir,
+            "input_files": sorted(input_files or []),
+            "metrics": metrics or {},
+            "partition_by": src.get("partition_by") or [],
+            "bucket_spec": src.get("bucket_spec") if data_dir else None,
+            "schema_json": src.get("schema_json"),
+        }
+
     # --------------------------------------------------------------- write
 
     def append(
@@ -137,10 +195,11 @@ class SnapshotCatalog:
         maps to Iceberg's multi-transform partition specs — e.g.
         days(ts) + bucket(n, url)).
 
-        Data files are fully written before the manifest is exposed via
-        atomic rename — a crash mid-write leaves a dangling data dir that
-        no manifest references (readers never see partial output), which
-        is the same commit protocol Iceberg uses (metadata swap last).
+        Data files are fully written before the manifest is exposed by
+        the os.link sequence claim (_commit_manifest) — a crash mid-write
+        leaves a dangling data dir that no manifest references (readers
+        never see partial output), which is the same commit protocol
+        Iceberg uses (metadata swap last).
 
         ``operation`` is "append" (new logical rows), "replace" (pure
         rewrite: the snapshot's data dir holds the ENTIRE table state as
@@ -185,85 +244,41 @@ class SnapshotCatalog:
                 w = w.partitionBy(*partition_by)
             w.parquet(str(data_dir))
 
-        parent = self.latest_snapshot()
-        seq = (parent["sequence"] + 1) if parent else 0
-        manifest = {
-            "sequence": seq,
-            "snapshot_id": snap_id,
-            "parent_id": parent["snapshot_id"] if parent else None,
-            "committed_at": time.time(),
-            "operation": operation,
-            "data_dir": str(data_dir),
-            "input_files": sorted(input_files or []),
-            "metrics": metrics or {},
-            "partition_by": partition_by or [],
-            "bucket_spec": (
-                {"n": int(bucket_by[0]), "cols": list(bucket_by[1])}
-                if bucket_by else None
-            ),
-            # full table schema: read() passes it as the user-specified
-            # schema, which types directory-encoded partition values
-            # natively (inference would stringify e.g. booleans) while
-            # keeping them in PartitionFilters for file-level pruning
-            "schema_json": df.schema.json(),
-        }
-        # Optimistic commit (the Iceberg protocol this seam maps onto):
-        # the manifest filename is keyed by sequence ALONE, and the final
-        # name is claimed with os.link — which, unlike os.rename, fails
-        # with EEXIST if another writer already committed that sequence.
-        # On collision we re-read the new latest snapshot, re-parent, bump
-        # the sequence, and retry — so two concurrent appends serialize
-        # into parent->child instead of one silently shadowing the other.
-        tmp = self.root / "snapshots" / f".tmp-{snap_id}"
+        manifest = self._manifest(
+            operation,
+            str(data_dir),
+            input_files,
+            metrics,
+            source={
+                "partition_by": partition_by or [],
+                "bucket_spec": (
+                    {"n": int(bucket_by[0]), "cols": list(bucket_by[1])}
+                    if bucket_by else None
+                ),
+                # full table schema: read() passes it as the user-specified
+                # schema, which types directory-encoded partition values
+                # natively (inference would stringify e.g. booleans) while
+                # keeping them in PartitionFilters for file-level pruning
+                "schema_json": df.schema.json(),
+            },
+            snapshot_id=snap_id,
+        )
         try:
-            for _attempt in range(100):
-                if expected_parent is not None and (
-                    parent is None or parent["snapshot_id"] != expected_parent
-                ):
-                    # the data dir was already written but no manifest will
-                    # ever reference it — without this cleanup every lost
-                    # rewrite race leaks a TABLE-SIZED orphan dir (compact/
-                    # upsert payloads are full table copies) that
-                    # expire_snapshots can never GC (it only walks
-                    # manifest-referenced dirs). Safe to delete: the commit
-                    # failed, so no reader can have resolved this dir.
-                    self._discard_uncommitted(data_dir)
-                    raise ConcurrentRewriteError(
-                        f"base snapshot moved: expected {expected_parent!r}, "
-                        f"latest is "
-                        f"{parent['snapshot_id'] if parent else None!r} — "
-                        "re-run the rewrite against the new state"
-                    )
-                manifest["sequence"] = seq
-                manifest["parent_id"] = parent["snapshot_id"] if parent else None
-                tmp.write_text(json.dumps(manifest, indent=2))
-                final = self.root / "snapshots" / f"{seq:08d}.json"
-                try:
-                    os.link(tmp, final)
-                except FileExistsError:
-                    parent = self.latest_snapshot()
-                    seq = (parent["sequence"] + 1) if parent else seq + 1
-                    continue
-                return manifest
-            self._discard_uncommitted(data_dir)  # same orphan-dir hazard
-            raise RuntimeError(
-                "snapshot commit contention: 100 retries exhausted"
-            )
-        finally:
-            # unlink on ALL exit paths (success, contention exhaustion, or
-            # any unexpected exception) — a leaked .tmp-* is invisible to
-            # readers (dot-files fall outside the *.json glob) but would
-            # accumulate in snapshots/ across driver runs
-            tmp.unlink(missing_ok=True)
-
-    @staticmethod
-    def _discard_uncommitted(data_dir: pathlib.Path) -> None:
-        """Remove a data dir whose commit failed (never referenced by any
-        manifest). Best-effort: a half-removed orphan is still an orphan,
-        and the commit error must propagate regardless."""
-        import shutil
-
-        shutil.rmtree(data_dir, ignore_errors=True)
+            return self._commit_manifest(manifest, expected_parent)
+        except RuntimeError:
+            # a lost rewrite race or contention exhaustion (the commit
+            # loop's two RuntimeErrors): the data dir was already written
+            # but no manifest will ever reference it — without this
+            # cleanup every lost rewrite race leaks a TABLE-SIZED orphan
+            # dir (compact/upsert payloads are full table copies) that
+            # expire_snapshots can never GC (it only walks
+            # manifest-referenced dirs). Safe to delete: the commit
+            # failed, so no reader can have resolved this dir. Best-effort:
+            # a half-removed orphan is still an orphan, and the commit
+            # error must propagate regardless. Any other exception leaves
+            # the dir for remove_orphan_files.
+            shutil.rmtree(data_dir, ignore_errors=True)
+            raise
 
     def compact(
         self,
@@ -473,7 +488,9 @@ class SnapshotCatalog:
             operation="staged",
         )
 
-    def publish(self, staged_snapshot_id: str) -> dict:
+    def publish(
+        self, staged_snapshot_id: str, metrics: dict | None = None
+    ) -> dict:
         """Make a staged snapshot visible — Iceberg's cherry-pick: a NEW
         manifest commits at the head referencing the SAME data dir (zero
         copy), carrying the staged commit's input-file lineage and
@@ -483,7 +500,12 @@ class SnapshotCatalog:
         the batch at a fresh sequence at publish time (an in-place flip
         at the OLD sequence would be invisible to any consumer already
         past it), and a compaction committed while the batch sat staged
-        cannot strand it behind the rewrite cut."""
+        cannot strand it behind the rewrite cut.
+
+        ``metrics`` (the auditor's observed counters) fold over the
+        staged metrics in that same head commit, so no manifest is ever
+        rewritten in place; a retry that finds the batch already
+        published returns the existing head unchanged."""
         # idempotence: a crash between the publish commit and the staged
         # unlink leaves both manifests; a retry must FINISH the publish
         # (remove the staged leftover, collapse any crash-orphaned
@@ -501,8 +523,7 @@ class SnapshotCatalog:
         tomb = self._abort_tombstone(staged_snapshot_id, snaps)
         if head is not None and tomb is not None:
             loser = head if tomb["sequence"] < head["sequence"] else tomb
-            (self.root / "snapshots"
-             / f"{loser['sequence']:08d}.json").unlink(missing_ok=True)
+            self._unlink(loser)
             if loser is head:
                 head = None
             else:
@@ -510,9 +531,7 @@ class SnapshotCatalog:
         if head is not None:
             leftover = self._by_id(staged_snapshot_id)
             if leftover is not None:
-                (self.root / "snapshots"
-                 / f"{leftover['sequence']:08d}.json").unlink(
-                    missing_ok=True)
+                self._unlink(leftover)
             return head
         if tomb is not None:
             raise ValueError(
@@ -540,20 +559,12 @@ class SnapshotCatalog:
                     "its batch is gone; re-stage and re-audit it"
                 ) from None
             raise
-        manifest = {
-            "sequence": -1,  # assigned by the commit loop
-            "snapshot_id": uuid.uuid4().hex[:16],
-            "parent_id": None,
-            "committed_at": time.time(),
-            "operation": "append",
-            "data_dir": s["data_dir"],
-            "input_files": s["input_files"],
-            "metrics": {**s["metrics"], "published_from": staged_snapshot_id},
-            "partition_by": s.get("partition_by", []),
-            "bucket_spec": s.get("bucket_spec"),
-            "schema_json": s.get("schema_json"),
-        }
-        out = self._commit_manifest(manifest)
+        out = self._commit_manifest(self._manifest(
+            "append", s["data_dir"], s["input_files"],
+            {**s["metrics"], **(metrics or {}),
+             "published_from": staged_snapshot_id},
+            source=s,
+        ))
         # self-heal the pre-scan's TOCTOU window: two concurrent
         # publishers of the same staged id can both pass the
         # published_from check and both commit a head — duplicated rows.
@@ -572,8 +583,7 @@ class SnapshotCatalog:
         # at it would brick every future read of the table).
         tomb = self._abort_tombstone(staged_snapshot_id, snaps)
         if tomb is not None and tomb["sequence"] < out["sequence"]:
-            (self.root / "snapshots"
-             / f"{out['sequence']:08d}.json").unlink(missing_ok=True)
+            self._unlink(out)
             raise ValueError(
                 f"staged snapshot {staged_snapshot_id!r} was aborted "
                 "concurrently — its batch is gone; re-stage it"
@@ -581,9 +591,7 @@ class SnapshotCatalog:
         # remove the staged manifest AFTER the publish commit: a crash in
         # between leaves both, which is safe (staged is skipped on every
         # read path, and both reference the same dir for GC purposes)
-        (self.root / "snapshots" / f"{s['sequence']:08d}.json").unlink(
-            missing_ok=True
-        )
+        self._unlink(s)
         return out
 
     def abort_staged(self, staged_snapshot_id: str) -> None:
@@ -612,8 +620,6 @@ class SnapshotCatalog:
         (idempotent: the surviving tombstone is reused, never
         re-committed) or swept by remove_orphan_files once the tombstone
         expires."""
-        import shutil
-
         snaps = self.snapshots()
         s = next(
             (o for o in snaps if o["snapshot_id"] == staged_snapshot_id),
@@ -637,32 +643,23 @@ class SnapshotCatalog:
         if tomb is None:
             if s is None:
                 raise KeyError(f"unknown snapshot {staged_snapshot_id!r}")
-            tomb = self._commit_manifest({
-                "sequence": -1,
-                "snapshot_id": uuid.uuid4().hex[:16],
-                "parent_id": None,
-                "committed_at": time.time(),
-                # data_dir EMPTY, not the staged dir: a tombstone is not
-                # a data reference — the batch's dir is doomed (so
-                # remove_orphan_files may legitimately finish a crashed
-                # abort's delete) and a completed abort must leave
-                # on-disk dirs == referenced dirs. The doomed dir rides
-                # in metrics for the cleanup/retry path only.
-                "operation": "abort",
-                "data_dir": "",
-                # NO input-file lineage: an aborted batch's inputs must
-                # stay re-ingestable (the whole point of the audit gate)
-                "input_files": [],
-                "metrics": {"aborted_from": staged_snapshot_id,
-                            "aborted_data_dir": s["data_dir"]},
-                "partition_by": [],
-                "schema_json": None,
-            })
+            # data_dir EMPTY, not the staged dir: a tombstone is not a
+            # data reference — the batch's dir is doomed (so
+            # remove_orphan_files may legitimately finish a crashed
+            # abort's delete) and a completed abort must leave on-disk
+            # dirs == referenced dirs. The doomed dir rides in metrics
+            # for the cleanup/retry path only. NO input-file lineage: an
+            # aborted batch's inputs must stay re-ingestable (the whole
+            # point of the audit gate)
+            tomb = self._commit_manifest(self._manifest(
+                "abort",
+                metrics={"aborted_from": staged_snapshot_id,
+                         "aborted_data_dir": s["data_dir"]},
+            ))
             head = self._published_head(staged_snapshot_id)
             if head is not None and head["sequence"] < tomb["sequence"]:
                 # lost the race: a publish head committed first
-                (self.root / "snapshots"
-                 / f"{tomb['sequence']:08d}.json").unlink(missing_ok=True)
+                self._unlink(tomb)
                 raise ValueError(
                     f"staged snapshot {staged_snapshot_id!r} was "
                     "published concurrently — aborting now would drop "
@@ -671,11 +668,9 @@ class SnapshotCatalog:
         # won: any later-sequence publish head is a racer that must
         # yield (its own post-commit scan does the same unlink)
         if head is not None:
-            (self.root / "snapshots"
-             / f"{head['sequence']:08d}.json").unlink(missing_ok=True)
+            self._unlink(head)
         if s is not None and s.get("operation") == "staged":
-            (self.root / "snapshots"
-             / f"{s['sequence']:08d}.json").unlink(missing_ok=True)
+            self._unlink(s)
         # dir identity by basename (relocation-safe, same convention as
         # expire_snapshots / remove_orphan_files)
         name = pathlib.Path(
@@ -709,8 +704,7 @@ class SnapshotCatalog:
             return None
         matches = sorted(matches, key=lambda s: s["sequence"])
         for extra in matches[1:]:
-            (self.root / "snapshots"
-             / f"{extra['sequence']:08d}.json").unlink(missing_ok=True)
+            self._unlink(extra)
         return matches[0]
 
     def _published_head(
@@ -749,23 +743,44 @@ class SnapshotCatalog:
             )
         return s
 
-    def _commit_manifest(self, manifest: dict) -> dict:
-        """Commit a fully-formed manifest (no data write) with the same
-        sequence-claim protocol as append(): os.link fails on a taken
-        sequence, re-parent and retry."""
+    def _commit_manifest(
+        self, manifest: dict, expected_parent: str | None = None
+    ) -> dict:
+        """Commit a fully-formed manifest — the ONE sequence-claim loop
+        every manifest write goes through (the Iceberg optimistic-commit
+        protocol this seam maps onto). The manifest filename is keyed by
+        sequence ALONE, and the final name is claimed with os.link —
+        which, unlike os.rename, fails with EEXIST if another writer
+        already committed that sequence. On collision we re-read the new
+        latest snapshot, re-parent, bump the sequence, and retry — so two
+        concurrent commits serialize into parent->child instead of one
+        silently shadowing the other.
+
+        ``expected_parent`` pins the commit's base (see append()): if the
+        latest snapshot is anything else — before the first claim or
+        after a collision — raise ConcurrentRewriteError instead of
+        re-parenting."""
         tmp = self.root / "snapshots" / f".tmp-{manifest['snapshot_id']}"
         parent = self.latest_snapshot()
         seq = (parent["sequence"] + 1) if parent else 0
         try:
             for _attempt in range(100):
+                if expected_parent is not None and (
+                    parent is None or parent["snapshot_id"] != expected_parent
+                ):
+                    raise ConcurrentRewriteError(
+                        f"base snapshot moved: expected {expected_parent!r}, "
+                        f"latest is "
+                        f"{parent['snapshot_id'] if parent else None!r} — "
+                        "re-run the rewrite against the new state"
+                    )
                 manifest["sequence"] = seq
                 manifest["parent_id"] = (
                     parent["snapshot_id"] if parent else None
                 )
                 tmp.write_text(json.dumps(manifest, indent=2))
-                final = self.root / "snapshots" / f"{seq:08d}.json"
                 try:
-                    os.link(tmp, final)
+                    os.link(tmp, self._manifest_path(seq))
                 except FileExistsError:
                     parent = self.latest_snapshot()
                     seq = (parent["sequence"] + 1) if parent else seq + 1
@@ -775,6 +790,10 @@ class SnapshotCatalog:
                 "snapshot commit contention: 100 retries exhausted"
             )
         finally:
+            # unlink on ALL exit paths (success, contention exhaustion, or
+            # any unexpected exception) — a leaked .tmp-* is invisible to
+            # readers (dot-files fall outside the *.json glob) but would
+            # accumulate in snapshots/ across driver runs
             tmp.unlink(missing_ok=True)
 
     # ------------------------------------------------------------- tags
@@ -790,19 +809,13 @@ class SnapshotCatalog:
         set — every manifest from the tag's last rewrite up to the tag —
         because dropping any of them would make the tagged read silently
         return partial state."""
-        import re as _re
-
-        if not _re.fullmatch(r"[A-Za-z0-9._-]+", name):
-            raise ValueError(f"invalid tag name {name!r}")
+        self._check_ref_name("tag", name)
         if snapshot_id is None:
             # anchor to the latest VISIBLE snapshot: the head can be a
             # staged (unpublished, invisible) commit, and a tag pointing
             # at it would both expose unaudited data through read(tag=)
             # and dangle when publish/abort unlinks the staged manifest
-            visible = [
-                s for s in self.snapshots()
-                if s.get("operation") not in self._NON_MAIN_OPS
-            ]
+            visible = self._visible()
             if not visible:
                 raise ValueError("cannot tag a catalog with no visible snapshots")
             snapshot_id = visible[-1]["snapshot_id"]
@@ -852,6 +865,11 @@ class SnapshotCatalog:
             tmp.unlink(missing_ok=True)
         return payload
 
+    @staticmethod
+    def _check_ref_name(kind: str, name: str) -> None:
+        if not re.fullmatch(r"[A-Za-z0-9._-]+", name):
+            raise ValueError(f"invalid {kind} name {name!r}")
+
     def tags(self) -> dict[str, str]:
         """All tags as {name: snapshot_id}."""
         tags_dir = self.root / "tags"
@@ -895,18 +913,12 @@ class SnapshotCatalog:
         visible). The marker commits through the same sequence-claim
         protocol as every manifest, so racing creators of one name get a
         clean 'already exists'."""
-        import re as _re
-
-        if not _re.fullmatch(r"[A-Za-z0-9._-]+", name):
-            raise ValueError(f"invalid branch name {name!r}")
+        self._check_ref_name("branch", name)
         snaps = self.snapshots()
         if self._branch_head(name, snaps) is not None:
             raise ValueError(f"branch {name!r} already exists")
         if snapshot_id is None:
-            visible = [
-                s for s in snaps
-                if s.get("operation") not in self._NON_MAIN_OPS
-            ]
+            visible = self._visible(snaps)
             if not visible:
                 raise ValueError(
                     "cannot branch a catalog with no visible snapshots"
@@ -921,19 +933,12 @@ class SnapshotCatalog:
                     f"cannot branch from {fork['operation']!r} snapshot "
                     f"{snapshot_id!r} — fork from main-table state"
                 )
-        return self._commit_manifest({
-            "sequence": -1,
-            "snapshot_id": uuid.uuid4().hex[:16],
-            "parent_id": None,
-            "committed_at": time.time(),
-            "operation": "branch",
-            "data_dir": "",  # marker: the fork point is the content
-            "input_files": [],
-            "metrics": {"branch": name,
-                        "branch_base": fork["snapshot_id"]},
-            "partition_by": fork.get("partition_by", []),
-            "schema_json": fork.get("schema_json"),
-        })
+        # marker: no data dir, the fork point is the content
+        return self._commit_manifest(self._manifest(
+            "branch",
+            metrics={"branch": name, "branch_base": fork["snapshot_id"]},
+            source=fork,
+        ))
 
     def branch_append(
         self,
@@ -1063,10 +1068,7 @@ class SnapshotCatalog:
         # divergence check: main's visible head must be the fork point
         # itself, or (crash-resume case) the fast-forward of one of THIS
         # branch's batches
-        visible = [
-            s for s in snaps
-            if s.get("operation") not in self._NON_MAIN_OPS
-        ]
+        visible = self._visible(snaps)
         main_head = visible[-1] if visible else None
         allowed = {fork["snapshot_id"]} | {
             s["snapshot_id"] for s in snaps
@@ -1092,26 +1094,14 @@ class SnapshotCatalog:
             m.pop("branch", None)
             m.pop("branch_base", None)
             m["fast_forwarded_from"] = b["snapshot_id"]
-            out.append(self._commit_manifest({
-                "sequence": -1,
-                "snapshot_id": uuid.uuid4().hex[:16],
-                "parent_id": None,
-                "committed_at": time.time(),
-                "operation": "append",
-                "data_dir": b["data_dir"],
-                "input_files": b["input_files"],
-                "metrics": m,
-                "partition_by": b.get("partition_by", []),
-                "bucket_spec": b.get("bucket_spec"),
-                "schema_json": b.get("schema_json"),
-            }))
+            out.append(self._commit_manifest(self._manifest(
+                "append", b["data_dir"], b["input_files"], m, source=b,
+            )))
         # branch manifests go AFTER the fold commits (a crash in between
         # leaves both — safe: branch manifests are invisible to main and
         # the batches' dirs are referenced by the new main manifests)
         for b in chain:
-            (self.root / "snapshots" / f"{b['sequence']:08d}.json").unlink(
-                missing_ok=True
-            )
+            self._unlink(b)
         return out
 
     def drop_branch(self, branch: str) -> None:
@@ -1120,8 +1110,6 @@ class SnapshotCatalog:
         identity, like abort_staged). The branch's input-file lineage is
         released with it — a dropped experiment's inputs are
         re-ingestable."""
-        import shutil
-
         snaps = self.snapshots()
         mine = [
             s for s in snaps
@@ -1131,9 +1119,7 @@ class SnapshotCatalog:
         if not mine:
             raise KeyError(f"unknown branch {branch!r}")
         for b in mine:
-            (self.root / "snapshots" / f"{b['sequence']:08d}.json").unlink(
-                missing_ok=True
-            )
+            self._unlink(b)
         survivors = self.snapshots()
         kept = {
             pathlib.Path(s["data_dir"]).name
@@ -1493,10 +1479,7 @@ class SnapshotCatalog:
             # publish/abort removes the staged manifest. Can't be empty:
             # read() above already raises on a catalog with no visible
             # snapshots.
-            return [
-                s for s in self.snapshots()
-                if s.get("operation") not in self._NON_MAIN_OPS
-            ][-1]
+            return self._visible()[-1]
         kept = current.where(f"NOT coalesce(({predicate}), false)")
         return self.append(
             kept,
@@ -1554,10 +1537,7 @@ class SnapshotCatalog:
                 self.read(spark).join(kdf, on=key, how="left_semi").count()
             )
             if matched == 0:
-                return [
-                    s for s in self.snapshots()
-                    if s.get("operation") not in self._NON_MAIN_OPS
-                ][-1]
+                return self._visible()[-1]
             m["deleted_records"] = matched
         return self.append(kdf, metrics=m, operation="mor_delete")
 
@@ -1630,24 +1610,13 @@ class SnapshotCatalog:
                 f"cannot roll back to {s['operation']!r} snapshot "
                 f"{snapshot_id!r} — not main-table state"
             )
-        visible = [
-            o for o in self.snapshots()
-            if o.get("operation") not in self._NON_MAIN_OPS
-        ]
+        visible = self._visible()
         if visible and visible[-1]["snapshot_id"] == snapshot_id:
             return visible[-1]
-        return self._commit_manifest({
-            "sequence": -1,  # assigned by the commit loop
-            "snapshot_id": uuid.uuid4().hex[:16],
-            "parent_id": None,
-            "committed_at": time.time(),
-            "operation": "rollback",
-            "data_dir": "",  # metadata-only: no data reference of its own
-            "input_files": [],
-            "metrics": {"rollback_to": snapshot_id},
-            "partition_by": s.get("partition_by", []),
-            "schema_json": s.get("schema_json"),
-        })
+        # metadata-only: no data reference of its own
+        return self._commit_manifest(self._manifest(
+            "rollback", metrics={"rollback_to": snapshot_id}, source=s,
+        ))
 
     def cherry_pick(self, snapshot_id: str) -> dict:
         """Re-apply one APPEND snapshot's rows onto the current head
@@ -1728,19 +1697,9 @@ class SnapshotCatalog:
             )
         m = dict(s["metrics"])
         m["cherry_picked_from"] = snapshot_id
-        out = self._commit_manifest({
-            "sequence": -1,
-            "snapshot_id": uuid.uuid4().hex[:16],
-            "parent_id": None,
-            "committed_at": time.time(),
-            "operation": "append",
-            "data_dir": s["data_dir"],
-            "input_files": s["input_files"],
-            "metrics": m,
-            "partition_by": s.get("partition_by", []),
-            "bucket_spec": s.get("bucket_spec"),
-            "schema_json": s.get("schema_json"),
-        })
+        out = self._commit_manifest(self._manifest(
+            "append", s["data_dir"], s["input_files"], m, source=s,
+        ))
         # self-heal the duplicate-guard's TOCTOU window (same class as
         # publish's): two concurrent cherry-picks of the same source can
         # BOTH pass the read-set scan and both commit — read() would
@@ -1870,8 +1829,6 @@ class SnapshotCatalog:
         gates on file age for that reason.
 
         Returns ``{"removed_dirs": n}``."""
-        import shutil
-
         # compare by dir BASENAME (the snapshot id that keyed the dir at
         # append time), never by raw path string: a manifest written from
         # another working directory, a symlinked mount, or a relocated
@@ -1913,8 +1870,6 @@ class SnapshotCatalog:
 
         Returns ``{"expired": n_manifests, "removed_dirs": n_dirs,
         "protected": n_tag_protected}``."""
-        import shutil
-
         ms = self._manifests()
         snaps = [json.loads(p.read_text()) for p in ms]
         cut = None
@@ -1939,12 +1894,9 @@ class SnapshotCatalog:
         # at the cut rewrite, but a rollback at/after the cut can point
         # the head's state at PRE-cut manifests — expiring those would
         # brick read() itself, not just time travel
-        visible = [
-            s for s in snaps
-            if s.get("operation") not in self._NON_MAIN_OPS
-        ]
+        visible = self._visible(snaps)
         anchors = set(self.tags().values()) | {
-            s["snapshot_id"] for s in snaps if s.get("operation") == "staged"
+            s["snapshot_id"] for s in self._staged(snaps)
         } | ({visible[-1]["snapshot_id"]} if visible else set()) | set(
             # live branch heads: a branch's whole state (its own commits
             # AND the fork point's main read set) must outlive expiry —

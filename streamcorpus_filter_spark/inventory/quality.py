@@ -271,23 +271,16 @@ def ql_pii_scrub(spark: SparkSession, sf: str) -> DataFrame:
 def ql_toxicity_scrub(spark: SparkSession, sf: str) -> DataFrame:
     """Toxicity masking via the broadcast lexicon automaton on fixture text
     with one planted term on every 7th doc."""
-    from ..kernels.scrub import boundary_ok, mask_spans
+    from ..kernels.scrub import mask_spans, toxic_spans_batch
     from ..models import toxic_automaton
 
     bc = cached_broadcast(spark, "toxic_ac", toxic_automaton)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ac = bc.value
-        lens = ac.pat_lens
         for pdf in batches:
             texts = list(pdf["orig"])
-            enc = [t.encode("utf-8").lower() for t in texts]
-            rows, begins, pids = ac.search_batch(enc)
-            spans: list[list[tuple[int, int]]] = [[] for _ in texts]
-            for r, b, p in zip(rows.tolist(), begins.tolist(), pids.tolist()):
-                e = b + int(lens[p])
-                if boundary_ok(enc[r], b, e):
-                    spans[r].append((b, e))
+            spans = toxic_spans_batch(ac, texts)
             masked = [mask_spans(t, s) for t, s in zip(texts, spans)]
             yield pd.DataFrame(
                 {

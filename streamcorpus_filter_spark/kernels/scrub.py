@@ -8,10 +8,11 @@ phone rule.
 
 ``mask_spans`` applies toxicity masking given hit spans: word-boundary
 validated, overlapping spans merged, each merged span replaced by <TOX>.
-The span *finder* differs between pipeline (Aho-Corasick automaton) and
-oracle (bytes.find loop); the masker is shared so the output bytes are
-defined once. Toxicity scanning lowercases with bytes.lower() (ASCII-only)
-so byte offsets are stable w.r.t. the original text.
+The span *finder* differs between pipeline (``toxic_spans_batch``, one
+Aho-Corasick pass per batch) and oracle (bytes.find loop); the masker is
+shared so the output bytes are defined once. Toxicity scanning lowercases
+with bytes.lower() (ASCII-only) so byte offsets are stable w.r.t. the
+original text.
 """
 
 from __future__ import annotations
@@ -81,6 +82,21 @@ def boundary_ok(data: bytes, begin: int, end: int) -> bool:
     if end < len(data) and data[end - 1] in _WORD_BYTES and data[end] in _WORD_BYTES:
         return False
     return True
+
+
+def toxic_spans_batch(ac, texts: list[str]) -> list[list[tuple[int, int]]]:
+    """Word-boundary-valid toxic-lexicon hit spans (byte offsets) of each
+    text, found by one search over the whole batch with the lexicon
+    automaton ``ac`` (kernels.automaton.ACAutomaton)."""
+    data = [t.encode("utf-8").lower() for t in texts]
+    rows, begins, pids = ac.search_batch(data)
+    spans: list[list[tuple[int, int]]] = [[] for _ in texts]
+    lens = ac.pat_lens
+    for r, b, p in zip(rows.tolist(), begins.tolist(), pids.tolist()):
+        e = b + int(lens[p])
+        if boundary_ok(data[r], b, e):
+            spans[r].append((b, e))
+    return spans
 
 
 def mask_spans(text: str, spans: list[tuple[int, int]]) -> tuple[str, int]:

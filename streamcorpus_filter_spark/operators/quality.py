@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..kernels import rules
 from ..kernels.automaton import ACAutomaton
-from ..kernels.scrub import boundary_ok, mask_spans, scrub_pii
+from ..kernels.scrub import mask_spans, scrub_pii, toxic_spans_batch
 from ..kernels.extract import extract_text
 
 # ---------------------------------------------------------------- structure
@@ -155,14 +155,7 @@ def fused_pipeline_udf(bc_langid, bc_lm, bc_ent_ac, bc_tox_ac, from_html: bool):
         # PII scrub (canonical kernel), then toxicity mask on the
         # scrubbed text via the broadcast automaton (ASCII-lower bytes)
         pii_out = [scrub_pii(t) for t in texts]
-        tox_input = [s.encode("utf-8").lower() for s, _b, _h in pii_out]
-        rows, begins, pids = tox_ac.search_batch(tox_input)
-        spans_per_doc: list[list[tuple[int, int]]] = [[] for _ in texts]
-        lens = tox_ac.pat_lens
-        for r, b, p in zip(rows.tolist(), begins.tolist(), pids.tolist()):
-            e = b + int(lens[p])
-            if boundary_ok(tox_input[r], b, e):
-                spans_per_doc[r].append((b, e))
+        spans_per_doc = toxic_spans_batch(tox_ac, [s for s, _b, _h in pii_out])
         for (s_text, pii_b, _h), spans in zip(pii_out, spans_per_doc):
             if len(spans) >= rules.TOX_DROP_HITS:
                 scrubbed.append(None)  # dropped as toxic downstream

@@ -316,7 +316,7 @@ def test_crashed_pending_batch_is_settled_on_next_run(
     # crash injection: publish dies AFTER the stage commit landed
     real_publish = SnapshotCatalog.publish
 
-    def dying_publish(self, sid):
+    def dying_publish(self, sid, **_kw):
         raise RuntimeError("simulated crash before the WAP decision")
 
     monkeypatch.setattr(SnapshotCatalog, "publish", dying_publish)
@@ -427,6 +427,48 @@ def test_crash_between_publish_and_lineage_is_healed(
     assert all(
         s["decision"] != "lineage_healed" for s in r2.get("settled", [])
     )
+
+
+def test_interleaved_lineage_writes_land_once(
+    spark, pages_dir, tmp_path, monkeypatch
+):
+    """Two settlers healing one head's lineage side-table at once: the
+    second runs start to finish while the first is inside its Spark
+    write. Both must return, and the landed dir must be complete and
+    hold each input file's row exactly once — neither writer may write
+    into, or clear, the other's output."""
+    import shutil
+
+    from pyspark.sql import DataFrameWriter
+
+    import run_pipeline as rp
+
+    table = str(tmp_path / "t")
+    run(spark, pages_dir, table, from_html=True, max_files=2)
+    cat = SnapshotCatalog(table)
+    head = cat.latest_snapshot()
+    mdir = pathlib.Path(table) / "metrics" / head["snapshot_id"]
+    shutil.rmtree(mdir)  # as if the lineage write had never run
+
+    real_parquet = DataFrameWriter.parquet
+    racers = []
+
+    def racing_parquet(self, path, *a, **kw):
+        if not racers:
+            racers.append(path)
+            rp._write_lineage(spark, cat, table, head)
+        return real_parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", racing_parquet)
+    rp._write_lineage(spark, cat, table, head)
+    monkeypatch.undo()
+
+    assert len(racers) == 1
+    assert (mdir / "_SUCCESS").exists()
+    files = [r["input_file"] for r in spark.read.parquet(str(mdir)).collect()]
+    assert len(files) == len(set(files)) == 2
+    # the loser's copy was dropped, not left beside the winner
+    assert sorted(p.name for p in mdir.parent.iterdir()) == [mdir.name]
 
 
 def test_zero_row_batch_publishes_and_lineage_survives(spark, tmp_path):
