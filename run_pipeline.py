@@ -26,9 +26,11 @@ Behavior:
     tests/test_resume.py);
   * runs the fused quality pipeline (extract -> structural -> langid /
     perplexity / entity-match / PII+toxicity scrub -> keep/drop);
-  * records per-input-file lineage and counter metrics (docs seen,
-    langid drops, perplexity drops, patterns matched, bytes scrubbed)
-    via df.observe — no second pass over the data;
+  * records counter metrics (docs seen, langid drops, perplexity
+    drops, patterns matched, bytes scrubbed) via df.observe on the stage
+    write itself — no second pass over the data — and per-input-file
+    lineage from four small columns of the staged files, read on the
+    driver with no Spark job;
   * commits through the catalog's WRITE-AUDIT-PUBLISH gate: the batch
     lands staged (invisible), the audit checks its own observed metrics
     (null urls; ``--min-keep-ratio``), and only a clean batch is
@@ -36,9 +38,11 @@ Behavior:
     re-ingestable, never visible table state; batches left pending by a
     crashed prior run are settled (re-audited from the durable staged
     rows) at the start of the next run;
-  * the published snapshot: partitioned parquet + manifest with
-    lineage, metrics, and a per-input-file metrics table under
-    <table>/metrics/.
+  * the published snapshot: partitioned parquet + one manifest that
+    commits the input files, the metrics and the per-input-file lineage
+    (``metrics["lineage"]``: docs_seen, docs_kept, bytes_scrubbed and
+    n_partitions lists aligned with the manifest's sorted
+    ``input_files``) atomically.
 
 Build the --py-files zip with:  python run_pipeline.py --make-zip scfs.zip
 """
@@ -47,9 +51,10 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import pathlib
+import re
 import sys
+from urllib.parse import unquote
 
 REPO = pathlib.Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
@@ -88,6 +93,50 @@ def _audit_aggs():
     ]
 
 
+def _lineage(cat, staged: dict) -> dict:
+    """Per-input-file lineage of a staged batch, for its published
+    manifest: docs_seen, docs_kept, bytes_scrubbed and n_partitions as
+    int lists aligned with the manifest's sorted ``input_files`` (the
+    file names are not repeated); a file that yielded no rows gets
+    zeros. Read on the driver from four small columns of the staged
+    files, with no Spark job — per-file conditional sums in the stage
+    write's own Observation cost 14–20% of the stage at 24 files and
+    more than the whole stage at 256 (BENCH/BASELINE.md finding 12)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    files = staged["input_files"]
+    out = {k: [0] * len(files)
+           for k in ("docs_seen", "docs_kept", "bytes_scrubbed", "n_partitions")}
+    d = ds.dataset(cat._data_dir(staged), format="parquet", partitioning="hive")
+    if not d.files:
+        return out  # a zero-row batch lands as _SUCCESS alone
+    t = d.to_table(columns=["input_file", "keep", "bytes_scrubbed", "partition_id"])
+    # keep is a boolean column, or its partition-encoded string
+    kept = pc.equal(pc.cast(t["keep"], pa.string()), "true").cast(pa.int64())
+    grouped = t.append_column("kept", kept).group_by("input_file").aggregate([
+        ("input_file", "count"), ("kept", "sum"), ("bytes_scrubbed", "sum"),
+        ("partition_id", "count_distinct"),
+    ])
+    index = {f: i for i, f in enumerate(files)}
+    for g in grouped.to_pylist():
+        i = index[g["input_file"]]  # input_file_name() gives inputFiles()' strings
+        out["docs_seen"][i] = g["input_file_count"]
+        out["docs_kept"][i] = g["kept_sum"]
+        out["bytes_scrubbed"][i] = g["bytes_scrubbed_sum"] or 0
+        out["n_partitions"][i] = g["partition_id_count_distinct"]
+    return out
+
+
+def _read_path(uri: str) -> str:
+    """The path that reads exactly the file an inputFiles() URI names:
+    the URI percent-encodes a space or '%' in a name, which the reader
+    would otherwise take literally, and the reader globs, so glob
+    characters are escaped. input_file_name() gives the URI back."""
+    return re.sub(r"([{}\[\]*?\\])", r"\\\1", unquote(uri))
+
+
 def _audit_metrics(metrics: dict, min_keep_ratio: float) -> list[str]:
     """The WAP audit: decide from the batch's own observed metrics
     whether it may become visible table state. Violations:
@@ -114,68 +163,21 @@ def _batch_rows(spark, cat, manifest: dict):
     data dir under the manifest schema. The schema makes the read total
     even for a ZERO-row batch (an empty batch publishes by design so
     --resume stops re-feeding its files, but Spark writes it as _SUCCESS
-    with no footers — a schemaless read would throw and, worse, the
-    settle heal loop would then retry the throw on every later run
-    forever)."""
+    with no footers — a schemaless read would throw, and settle would
+    retry the throw on every later run forever)."""
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(manifest["schema_json"]))
     return spark.read.schema(schema).parquet(cat._data_dir(manifest))
 
 
-def _write_lineage(spark, cat, table: str, head: dict) -> None:
-    """Per-input-file lineage metrics table (tiny; one row per input
-    file), re-read from the published snapshot's data dir — cheaper
-    than re-running the pipeline for a second aggregation pass.
-
-    Spark writes into a unique temp dir beside ``metrics/<id>`` that is
-    then renamed into place, so two settlers healing the same head never
-    write into (or clear) each other's in-flight output: the first
-    rename lands a complete dir, and a later one finds ``_SUCCESS``
-    there and drops its own copy."""
-    import shutil
-    import uuid
-
-    import pyspark.sql.functions as F
-
-    mdir = pathlib.Path(table) / "metrics" / head["snapshot_id"]
-    if (mdir / "_SUCCESS").exists():
-        return  # settle retry after a crash mid-lineage-write
-    lineage = (
-        _batch_rows(spark, cat, head)
-        .groupBy("input_file")
-        .agg(
-            F.count(F.lit(1)).alias("docs_seen"),
-            # keep may be a directory-encoded partition value (string)
-            F.sum((F.col("keep").cast("string") == "true").cast("long")).alias("docs_kept"),
-            F.sum(F.coalesce("bytes_scrubbed", F.lit(0))).alias("bytes_scrubbed"),
-            F.countDistinct("partition_id").alias("n_partitions"),
-        )
-        .withColumn("snapshot_id", F.lit(head["snapshot_id"]))
-    )
-    tmp = mdir.with_name(f".tmp-{mdir.name}-{uuid.uuid4().hex[:8]}")
-    lineage.coalesce(1).write.mode("errorifexists").parquet(str(tmp))
-    try:
-        os.rename(tmp, mdir)
-    except OSError:
-        if (mdir / "_SUCCESS").exists():
-            shutil.rmtree(tmp, ignore_errors=True)  # a racer landed first
-            return
-        # a partial dir (no _SUCCESS) from a writer that wrote in place
-        # and died: move it aside, then land ours
-        stale = tmp.with_name(f"{tmp.name}-stale")
-        os.rename(mdir, stale)
-        shutil.rmtree(stale)
-        os.rename(tmp, mdir)
-
-
-def _settle_pending(spark, cat, table: str, min_keep_ratio: float) -> list[dict]:
+def _settle_pending(spark, cat, min_keep_ratio: float) -> list[dict]:
     """Finish WAP decisions a crashed prior run left PENDING: a batch
     staged but neither published nor aborted would otherwise stay
     invisible forever while its input lineage blocks --resume from
     re-feeding the files — silent data loss. The staged rows are
-    durable, so the audit re-runs from THEM (one aggregation scan),
-    then the idempotent publish/abort lands the decision."""
+    durable, so the audit and the lineage re-run from THEM, then the
+    idempotent publish/abort lands the decision."""
     settled = []
     for s in cat._staged():
         if "pipeline_wap" not in s.get("metrics", {}):
@@ -195,26 +197,10 @@ def _settle_pending(spark, cat, table: str, min_keep_ratio: float) -> list[dict]
                 "violations": violations,
             })
         else:
-            head = cat.publish(s["snapshot_id"], metrics=m)
-            _write_lineage(spark, cat, table, head)
+            head = cat.publish(s["snapshot_id"],
+                               metrics={**m, "lineage": _lineage(cat, s)})
             settled.append({
                 "snapshot": head["snapshot_id"], "decision": "published",
-            })
-    # heal the publish-then-crash window too: a head whose staged
-    # manifest publish() already unlinked never re-enters the loop
-    # above, so a crash between publish() and _write_lineage() would
-    # otherwise strand the published snapshot without its lineage
-    # side-table forever (_write_lineage is idempotent via _SUCCESS)
-    for s in cat._visible():
-        m = s.get("metrics", {})
-        if "pipeline_wap" not in m or "published_from" not in m:
-            continue
-        if not (pathlib.Path(table) / "metrics" / s["snapshot_id"]
-                / "_SUCCESS").exists():
-            _write_lineage(spark, cat, table, s)
-            settled.append({
-                "snapshot": s["snapshot_id"],
-                "decision": "lineage_healed",
             })
     return settled
 
@@ -246,7 +232,7 @@ def run(
     from streamcorpus_filter_spark.catalog import SnapshotCatalog
 
     cat = SnapshotCatalog(table)
-    settled = _settle_pending(spark, cat, table, min_keep_ratio)
+    settled = _settle_pending(spark, cat, min_keep_ratio)
 
     candidates = sorted(spark.read.parquet(input_path).inputFiles())
     todo = candidates
@@ -270,7 +256,8 @@ def run(
     # table visible in the per-file read (a bare leaf-file read drops
     # them silently — the column would vanish from every output)
     pages = (
-        spark.read.option("basePath", input_path).parquet(*todo)
+        spark.read.option("basePath", input_path)
+        .parquet(*[_read_path(f) for f in todo])
         .withColumn("input_file", F.input_file_name())
     )
     out = run_quality_pipeline(
@@ -288,11 +275,12 @@ def run(
     # written + committed STAGED (invisible to read()/--resume-as-
     # published), the audit runs on the observation the stage write
     # itself populated (no second pass), and only a clean batch is
-    # published. Crash windows all converge: before the decision ->
-    # the next run's _settle_pending re-audits the durable staged rows;
-    # after publish but before the lineage side-table -> _write_lineage
-    # is retried idempotently by settle; abort leaves the inputs
-    # re-ingestable (the tombstone carries no lineage).
+    # published. The per-file lineage commits in the published manifest
+    # itself, so no crash window separates a visible batch from its
+    # lineage: a crash before the decision -> the next run's
+    # _settle_pending re-audits the durable staged rows and takes the
+    # lineage from them; abort leaves the inputs re-ingestable (the
+    # tombstone carries no lineage).
     staged = cat.stage(
         out, input_files=todo,
         # min_keep_ratio rides in the staged manifest so a crash-settle
@@ -325,9 +313,10 @@ def run(
             result["settled"] = settled
         return result
 
-    # the observed metrics ride in the published head's commit
+    # the observed metrics and the lineage ride in the published
+    # head's commit
+    metrics["lineage"] = _lineage(cat, staged)
     head = cat.publish(staged["snapshot_id"], metrics=metrics)
-    _write_lineage(spark, cat, table, head)
 
     result = {
         "status": "committed",

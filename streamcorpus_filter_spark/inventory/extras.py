@@ -436,10 +436,19 @@ def _staged(spark: SparkSession, sf: str, fmt: str) -> str:
              .write.mode("overwrite").text(d))
         elif fmt == "csv":
             # nullValue sentinel: the default encodes NULL as the same
-            # empty field the reader can't tell from ''. The two
-            # whitespace options default TRUE on the WRITER (they trim
-            # a whitespace-only text value to '' in the file — reader
-            # defaults are false, so the corruption is write-side)
+            # empty field the reader can't tell from ''. A value that IS
+            # the sentinel text is no more distinguishable (quoting does
+            # not help: the reader compares the unquoted value), so a
+            # leading backslash of every string value is doubled and
+            # scan_csv strips it — no written value is then '\N'. The
+            # two whitespace options default TRUE on the WRITER (they
+            # trim a whitespace-only text value to '' in the file —
+            # reader defaults are false, so the corruption is write-side)
+            docs = docs.select(*[
+                F.when(F.col(c).startswith("\\"), F.concat(F.lit("\\"), c))
+                .otherwise(F.col(c)).alias(c) if t == "string" else c
+                for c, t in docs.dtypes
+            ])
             (docs.write.mode("overwrite").option("header", "true")
              .option("compression", "gzip")
              .option("nullValue", "\\N")
@@ -465,13 +474,18 @@ def scan_csv(spark: SparkSession, sf: str) -> DataFrame:
     value-identical to the parquet oracle; multiLine handles quoted
     embedded newlines (web text has them — the default reader splits
     records mid-quote and corrupts every row after the first \\n)."""
+    def unescape(c: str):  # _staged doubled a leading backslash
+        return (F.when(F.col(c).startswith("\\"), F.expr(f"substr({c}, 2)"))
+                .otherwise(F.col(c)).alias(c))
+
     return (
         spark.read.schema(_DOCS_SCHEMA)
         .option("header", "true")
         .option("multiLine", "true")
         .option("nullValue", "\\N")
         .csv(_staged(spark, sf, "csv"))
-        .select("doc_id", "text", "lang", "source", "n_chars")
+        .select("doc_id", unescape("text"), unescape("lang"),
+                unescape("source"), "n_chars")
     )
 
 

@@ -34,27 +34,27 @@ SCRUB_RULES: list[tuple[str, re.Pattern[str], str]] = [
 ]
 
 
-# Trigger gates: every email match contains '@'; every ssn/phone/ipv4
-# match contains an ASCII digit. One cheap C-level scan decides whether a
-# rule's full pattern can possibly match — skipping it is byte-identical
-# because a skipped rule had zero matches by construction.
-_DIGIT_RE = re.compile(r"\d")
+# Trigger gates: one necessary substring per rule — a pattern that every
+# match of the rule contains — searched on the text the rule actually sees
+# (after the earlier rules replaced their matches). A rule whose gate finds
+# nothing has no match, so skipping it is byte-identical. A digit rule's
+# gate is its match without the lookarounds and optional prefix: a bare
+# digit gate never skips on crawl text, where every survivor has a digit.
+_GATES = {
+    "email": lambda text: "@" in text,
+    "ssn": re.compile(r"\d-\d{2}-\d", re.ASCII).search,
+    "phone": re.compile(r"\d{3}\)?[ .-]\d{3}[ .-]\d{4}", re.ASCII).search,
+    "ipv4": re.compile(r"\d\.\d{1,3}\.\d{1,3}\.\d", re.ASCII).search,
+}
 
 
 def scrub_pii(text: str) -> tuple[str, int, int]:
     """Returns (scrubbed_text, bytes_scrubbed, n_pii_hits).
     bytes_scrubbed = UTF-8 length of all replaced source spans."""
-    has_at = "@" in text
-    has_digit = _DIGIT_RE.search(text) is not None
-    if not has_at and not has_digit:
-        return text, 0, 0
     total_bytes = 0
     total_hits = 0
-    for _name, pat, repl in SCRUB_RULES:
-        if _name == "email":
-            if not has_at:
-                continue
-        elif not has_digit:
+    for name, pat, repl in SCRUB_RULES:
+        if not _GATES[name](text):
             continue
         spans: list[str] = []
 

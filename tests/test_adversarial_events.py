@@ -144,3 +144,56 @@ def test_adversarial_event_parity(spark, reg, oracles, adv_dir, adv_duck, name):
             f"{name}.{c}: first diff at row {int(same.idxmin())}: "
             f"{g[c][~same].head(3).tolist()} vs {w[c][~same].head(3).tolist()}"
         )
+
+
+def _hot_user_events(path: str) -> None:
+    """Clicks and purchases where user 7 holds about half of all events:
+    equal-ts click/purchase ties, a purchase before any click, a
+    duplicated purchase id, and NULL users and timestamps."""
+    import random
+
+    rng = random.Random(11)
+    t0 = datetime.datetime(2024, 3, 1, 12, 0, 0)
+    rows = []
+    for i in range(400):
+        user = 7 if i % 2 == 0 else rng.randrange(1, 40)
+        ts = t0 + datetime.timedelta(minutes=rng.randrange(0, 300))
+        rows.append((i, ts, user, rng.choice(["click", "purchase", "view"])))
+    rows += [
+        (400, t0 + datetime.timedelta(minutes=5), 7, "click"),
+        (401, t0 + datetime.timedelta(minutes=5), 7, "purchase"),  # tie
+        (402, t0 - datetime.timedelta(hours=1), 7, "purchase"),  # no click yet
+        (401, t0 + datetime.timedelta(minutes=9), 8, "purchase"),  # dup id
+        (403, t0 + datetime.timedelta(minutes=9), None, "purchase"),
+        (404, t0, None, "click"),
+        (405, None, 7, "purchase"),
+        (406, None, 7, "click"),
+    ]
+    pq.write_table(pa.table({
+        "event_id": pa.array([r[0] for r in rows], pa.int64()),
+        "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
+        "user_id": pa.array([r[2] for r in rows], pa.int64()),
+        "event_type": pa.array([r[3] for r in rows], pa.string()),
+        "value": pa.array([1.0] * len(rows), pa.float64()),
+        "props": pa.array(["{}"] * len(rows), pa.string()),
+    }), path)
+
+
+def test_asof_hot_user_parity_without_join(spark, reg, oracles, tmp_path):
+    """join_asof_interval on a hot user matches the DuckDB oracle, and
+    its plan has no join — a c_ts <= p_ts join is quadratic in the hot
+    user's events."""
+    _hot_user_events(str(tmp_path / "events.parquet"))
+    df = reg.QUERIES["join_asof_interval"](spark, str(tmp_path))
+    assert "Join" not in df._jdf.queryExecution().executedPlan().toString()
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+    want = con.execute(oracles["join_asof_interval"]).df()
+    con.close()
+    got = df.toPandas()
+    key = ["purchase_id", "last_click_ts"]
+    g = got[key].sort_values(key, ignore_index=True)
+    w = want[key].sort_values(key, ignore_index=True)
+    assert len(w) > 100
+    assert g.astype(str).equals(w.astype(str))

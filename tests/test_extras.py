@@ -395,3 +395,27 @@ def test_host_rank_matches_python_recount(spark, reg):
     # damped total mass is conserved up to truncation loss
     total = sum(v[1] for v in got.values())
     assert 0.97 * PR_TOTAL_MICRO < total <= PR_TOTAL_MICRO
+
+
+def test_csv_scan_keeps_a_text_that_is_the_null_sentinel(spark, reg, tmp_path):
+    """The CSV staging writes NULL as the sentinel '\\N'; a document whose
+    text IS those two characters — or starts with a backslash the escape
+    doubles — must still read back as itself, not as NULL."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    texts = ["\\N", "\\\\N", "\\", "\\x y", "N", "", None, "plain \\N"]
+    n = len(texts)
+    pq.write_table(pa.table({
+        "doc_id": pa.array(range(n), pa.int64()),
+        "text": pa.array(texts, pa.string()),
+        "lang": pa.array(["\\N"] + ["en"] * (n - 1), pa.string()),
+        "source": pa.array(["src"] * (n - 1) + [None], pa.string()),
+        "n_chars": pa.array([len(t or "") for t in texts], pa.int64()),
+    }), str(tmp_path / "documents.parquet"))
+    got = sorted(
+        tuple(r) for r in reg.QUERIES["scan_csv"](spark, str(tmp_path)).collect())
+    want = sorted(
+        tuple(r.values()) for r in
+        pq.read_table(str(tmp_path / "documents.parquet")).to_pylist())
+    assert got == want

@@ -219,3 +219,41 @@ def test_fast_alpha_rule_matches_per_token_count(text):
     assert (got == "gopher_alpha") == (
         alpha / len(toks) < rules.MIN_ALPHA_WORD_FRAC
     )
+
+
+# whole ssn, phone and ipv4 shapes beside loose digit groups and the
+# separators the rules key on: joined, they give matches, near misses
+# (a digit or dot glued on breaks a lookaround) and one rule's match
+# inside another's
+_PII_TOKENS = st.one_of(
+    st.from_regex(r"[0-9]{3}-[0-9]{2}-[0-9]{4}", fullmatch=True),
+    st.from_regex(r"(\+?1[ .-])?\(?[0-9]{3}\)?[ .-][0-9]{3}[ .-][0-9]{4}",
+                  fullmatch=True),
+    st.from_regex(r"([0-9]{1,3}\.){3}[0-9]{1,3}", fullmatch=True),
+    st.from_regex(r"[0-9]{1,4}", fullmatch=True),
+    st.sampled_from([".", "-", " ", "(", ")", "@", "+", "a", "x.co", "é"]),
+)
+
+
+def _scrub_ungated(text: str) -> tuple[str, int, int]:
+    """scrub_pii's rule chain with every rule run unconditionally."""
+    from streamcorpus_filter_spark.kernels.scrub import SCRUB_RULES
+
+    total_bytes = total_hits = 0
+    for _name, pat, repl in SCRUB_RULES:
+        spans = [m.group(0) for m in pat.finditer(text)]
+        text = pat.sub(repl, text)
+        total_hits += len(spans)
+        total_bytes += sum(len(s.encode("utf-8")) for s in spans)
+    return text, total_bytes, total_hits
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.lists(_PII_TOKENS, max_size=12).map("".join))
+def test_scrub_gates_match_ungated_chain(text):
+    """Each PII rule's trigger gate is a substring of every match of the
+    rule, so skipping the rule when its gate finds nothing changes no
+    byte of the output."""
+    from streamcorpus_filter_spark.kernels.scrub import scrub_pii
+
+    assert scrub_pii(text) == _scrub_ungated(text)

@@ -12,6 +12,7 @@ from __future__ import annotations
 import json
 import pathlib
 
+import pyspark.sql.functions as F
 import pytest
 
 from run_pipeline import run
@@ -97,14 +98,11 @@ def test_metrics_conservation_and_lineage(spark, pages_dir, tmp_path):
     assert snap["metrics"]["docs_seen"] == N_PAGES
     assert len(snap["input_files"]) == N_FILES
 
-    # per-input-file metrics table: every input file accounted for, and
-    # its docs_seen sums back to the total
-    mdir = pathlib.Path(table) / "metrics" / snap["snapshot_id"]
-    lineage = spark.read.parquet(str(mdir))
-    rows = lineage.collect()
-    assert len(rows) == N_FILES
-    assert sum(x["docs_seen"] for x in rows) == N_PAGES
-    assert all(x["snapshot_id"] == snap["snapshot_id"] for x in rows)
+    # per-input-file lineage in the same manifest: every input file
+    # accounted for, and its docs_seen sums back to the total
+    lineage = snap["metrics"]["lineage"]
+    assert all(len(v) == N_FILES for v in lineage.values())
+    assert sum(lineage["docs_seen"]) == N_PAGES
 
 
 def test_snapshot_time_travel_and_incremental(spark, pages_dir, tmp_path):
@@ -341,9 +339,8 @@ def test_crashed_pending_batch_is_settled_on_next_run(
     # settled metrics were folded into the published manifest
     head = cat.latest_snapshot()
     assert head["metrics"]["docs_seen"] == N_PAGES - n_visible
-    # and the lineage side table exists for the settled snapshot
-    mdir = pathlib.Path(table) / "metrics" / head["snapshot_id"]
-    assert mdir.exists()
+    # and the settled manifest carries the lineage
+    assert sum(head["metrics"]["lineage"]["docs_seen"]) == N_PAGES - n_visible
 
 
 def test_crashed_pending_poisoned_batch_settles_to_abort(
@@ -380,103 +377,86 @@ def test_crashed_pending_poisoned_batch_settles_to_abort(
         cat.read(spark)
 
 
-def test_crash_between_publish_and_lineage_is_healed(
+def _published_lineage(manifest: dict) -> dict:
+    """What a published manifest commits about its batch, without the
+    fields that name the commit itself."""
+    m = {k: v for k, v in manifest["metrics"].items() if k != "published_from"}
+    return {"input_files": manifest["input_files"], "metrics": m}
+
+
+def test_settled_batch_commits_the_live_lineage(
     spark, pages_dir, tmp_path, monkeypatch
 ):
-    """Crash AFTER publish() committed the head but BEFORE the lineage
-    side-table landed: the staged manifest is already unlinked, so the
-    staged-scan settle loop never sees this batch — settle must heal it
-    from the published head (which inherits the pipeline_wap marker),
-    including a partially-written metrics dir (crash mid-Spark-write
-    leaves the dir without _SUCCESS)."""
-    import run_pipeline as rp
+    """A batch crashed between stage and publish, then settled by the
+    next run, publishes the same lineage and totals as the same batch
+    run live — settle takes both from the durable staged rows."""
+    live = str(tmp_path / "live")
+    run(spark, pages_dir, live, from_html=True, max_files=2)
 
-    table = str(tmp_path / "t")
+    crashed = str(tmp_path / "crashed")
 
-    real_lineage = rp._write_lineage
+    def dying_publish(self, sid, **_kw):
+        raise RuntimeError("simulated crash before the WAP decision")
 
-    def dying_lineage(spark_, cat_, table_, head_):
-        raise RuntimeError("simulated crash after publish")
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotCatalog, "publish", dying_publish)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            run(spark, pages_dir, crashed, from_html=True, max_files=2)
+    r = run(spark, pages_dir, crashed, from_html=True, resume=True)
+    assert r["settled"][0]["decision"] == "published"
 
-    monkeypatch.setattr(rp, "_write_lineage", dying_lineage)
-    with pytest.raises(RuntimeError, match="after publish"):
-        run(spark, pages_dir, table, from_html=True, max_files=1)
-    monkeypatch.setattr(rp, "_write_lineage", real_lineage)
+    settled = SnapshotCatalog(crashed)._by_id(r["settled"][0]["snapshot"])
+    want = _published_lineage(SnapshotCatalog(live).latest_snapshot())
+    assert _published_lineage(settled) == want
+    assert sum(want["metrics"]["lineage"]["docs_seen"]) == N_PAGES // 2
 
-    cat = SnapshotCatalog(table)
+
+def test_lineage_aligns_with_input_files(spark, tmp_path):
+    """The manifest's lineage lists are aligned with its sorted
+    input_files and sum to the batch totals — also for files whose
+    names inputFiles() percent-encodes (a space, a '%') or the reader
+    would glob ('[', ']'). No side table is written beside the table."""
+    d = tmp_path / "in"
+    d.mkdir()
+    names = ["a b.parquet", "c%20d.parquet", "e[1].parquet", "plain.parquet"]
+    for i, n in enumerate(names):
+        write_pages_parquet(str(d / n), 20 + 10 * i, seed=200 + i)
+    table = tmp_path / "t"
+    r = run(spark, str(d), str(table), from_html=True)
+    assert r["status"] == "committed"
+
+    cat = SnapshotCatalog(str(table))
     head = cat.latest_snapshot()
-    assert head is not None  # published, visible...
-    mdir = pathlib.Path(table) / "metrics" / head["snapshot_id"]
-    assert not mdir.exists()  # ...but lineage never landed
+    m = head["metrics"]
+    lineage = m["lineage"]
+    assert sorted(lineage) == [
+        "bytes_scrubbed", "docs_kept", "docs_seen", "n_partitions"]
+    assert all(len(v) == len(names) for v in lineage.values())
+    for k in ("docs_seen", "docs_kept", "bytes_scrubbed"):
+        assert sum(lineage[k]) == m[k]
+    assert m["docs_seen"] == sum(20 + 10 * i for i in range(len(names)))
+    assert all(n >= 1 for n in lineage["n_partitions"])
 
-    # worse: fake a partial write (dir exists, no _SUCCESS) — the heal
-    # must clear and rewrite it, not trust the bare dir
-    mdir.mkdir(parents=True)
-    (mdir / "_temporary").mkdir()
-
-    r = run(spark, pages_dir, table, from_html=True, resume=True,
-            max_files=1)
-    assert {"snapshot": head["snapshot_id"], "decision": "lineage_healed"} \
-        in r.get("settled", [])
-    assert (mdir / "_SUCCESS").exists()
-    lin = spark.read.parquet(str(mdir))
-    assert lin.count() == 1  # one input file in the healed batch
-    assert lin.select("docs_seen").first()[0] == head["metrics"]["docs_seen"]
-    # idempotent: a further run heals nothing more
-    r2 = run(spark, pages_dir, table, from_html=True, resume=True)
-    assert all(
-        s["decision"] != "lineage_healed" for s in r2.get("settled", [])
-    )
-
-
-def test_interleaved_lineage_writes_land_once(
-    spark, pages_dir, tmp_path, monkeypatch
-):
-    """Two settlers healing one head's lineage side-table at once: the
-    second runs start to finish while the first is inside its Spark
-    write. Both must return, and the landed dir must be complete and
-    hold each input file's row exactly once — neither writer may write
-    into, or clear, the other's output."""
-    import shutil
-
-    from pyspark.sql import DataFrameWriter
-
-    import run_pipeline as rp
-
-    table = str(tmp_path / "t")
-    run(spark, pages_dir, table, from_html=True, max_files=2)
-    cat = SnapshotCatalog(table)
-    head = cat.latest_snapshot()
-    mdir = pathlib.Path(table) / "metrics" / head["snapshot_id"]
-    shutil.rmtree(mdir)  # as if the lineage write had never run
-
-    real_parquet = DataFrameWriter.parquet
-    racers = []
-
-    def racing_parquet(self, path, *a, **kw):
-        if not racers:
-            racers.append(path)
-            rp._write_lineage(spark, cat, table, head)
-        return real_parquet(self, path, *a, **kw)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", racing_parquet)
-    rp._write_lineage(spark, cat, table, head)
-    monkeypatch.undo()
-
-    assert len(racers) == 1
-    assert (mdir / "_SUCCESS").exists()
-    files = [r["input_file"] for r in spark.read.parquet(str(mdir)).collect()]
-    assert len(files) == len(set(files)) == 2
-    # the loser's copy was dropped, not left beside the winner
-    assert sorted(p.name for p in mdir.parent.iterdir()) == [mdir.name]
+    # aligned: entry i counts the rows input_files[i] yielded
+    recount = {
+        row["input_file"]: (row["n"], row["k"])
+        for row in cat.read(spark).groupBy("input_file").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("keep").cast("long")).alias("k"),
+        ).collect()
+    }
+    assert recount == {
+        f: (n, k) for f, n, k in zip(
+            head["input_files"], lineage["docs_seen"], lineage["docs_kept"])
+    }
+    assert not (table / "metrics").exists()
 
 
 def test_zero_row_batch_publishes_and_lineage_survives(spark, tmp_path):
     """An EMPTY batch publishes by design (so --resume stops re-feeding
-    its files) — and the lineage write must survive it: Spark writes a
+    its files) — and the lineage must survive it: Spark writes a
     zero-row partitioned snapshot as _SUCCESS with no parquet footers,
-    so a schemaless read would throw and the settle heal loop would then
-    retry the throw on every later run, bricking the table."""
+    so a reader that needs a footer would throw on every later run."""
     d = tmp_path / "in"
     d.mkdir(exist_ok=True)
     _poison_chunk(str(d / "empty.parquet"), n=0)
@@ -486,10 +466,13 @@ def test_zero_row_batch_publishes_and_lineage_survives(spark, tmp_path):
     assert r["metrics"]["docs_seen"] == 0
     cat = SnapshotCatalog(table)
     head = cat.latest_snapshot()
-    mdir = pathlib.Path(table) / "metrics" / head["snapshot_id"]
-    assert (mdir / "_SUCCESS").exists()
-    assert spark.read.parquet(str(mdir)).count() == 0
-    # and the next run neither re-feeds the file nor re-heals anything
+    # the empty file still gets its (all-zero) lineage entry
+    assert len(head["input_files"]) == 1
+    assert head["metrics"]["lineage"] == {
+        "docs_seen": [0], "docs_kept": [0], "bytes_scrubbed": [0],
+        "n_partitions": [0],
+    }
+    # and the next run neither re-feeds the file nor settles anything
     r2 = run(spark, str(d), table, from_html=True, resume=True)
     assert r2["status"] == "up-to-date"
     assert "settled" not in r2

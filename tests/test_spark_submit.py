@@ -71,8 +71,9 @@ def test_spark_submit_py_files_zip_end_to_end():
     assert m["metrics"]["docs_seen"] == 300
     assert m["metrics"]["docs_kept"] > 0
     assert len(m["input_files"]) == 4
-    mdir = table / "metrics" / m["snapshot_id"]
-    assert list(mdir.glob("*.parquet"))
+    lineage = m["metrics"]["lineage"]
+    assert all(len(v) == 4 for v in lineage.values())
+    assert sum(lineage["docs_seen"]) == 300
 
 
 def test_task_slots_parser():
