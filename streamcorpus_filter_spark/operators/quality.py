@@ -256,31 +256,29 @@ def run_quality_pipeline(
         )(F.col(in_col)).alias("m"),
     )
 
+    # the cascade as SQL text: the select crosses py4j once plus its
+    # argument list, where the Column-builder form crossed once per
+    # builder call (BENCH/BASELINE.md finding 13). The float thresholds
+    # are double literals (`D`): a bare 0.3 would parse as a decimal.
     r = rules
-    final_reason = F.coalesce(
-        F.col("m.sreason"),
-        F.when(F.col("m.lang_conf") < r.MIN_LANG_CONF, "lang_uncertain")
-        .when(F.col("m.ppl") > r.MAX_PPL, "high_ppl")
-        .when(F.col("m.tox_hits") >= r.TOX_DROP_HITS, "toxic"),
+    final_reason = (
+        "coalesce(m.sreason, CASE"
+        f" WHEN m.lang_conf < {r.MIN_LANG_CONF!r}D THEN 'lang_uncertain'"
+        f" WHEN m.ppl > {r.MAX_PPL!r}D THEN 'high_ppl'"
+        f" WHEN m.tox_hits >= {r.TOX_DROP_HITS} THEN 'toxic' END)"
     )
     # oracle short-circuit parity: stages after the drop point are null
-    early = F.coalesce(
-        final_reason.isin("lang_uncertain", "high_ppl"), F.lit(False)
-    )
-    return enriched.select(
-        *passthrough,
-        F.col("m.lang_pred").alias("lang_pred"),
-        F.col("m.lang_conf").alias("lang_conf"),
-        F.col("m.ppl").alias("ppl"),
-        F.when(~early, F.col("m.patterns_matched")).alias("patterns_matched"),
-        F.when(~early, F.col("m.total_hits")).alias("total_hits"),
-        F.when(final_reason.isNull(), F.col("m.scrubbed_text")).alias(
-            "scrubbed_text"
-        ),
-        F.when(final_reason.isNull(), F.col("m.bytes_scrubbed")).alias(
-            "bytes_scrubbed"
-        ),
-        F.when(~early, F.col("m.tox_hits")).alias("tox_hits"),
-        final_reason.isNull().alias("keep"),
-        final_reason.alias("drop_reason"),
+    early = f"coalesce({final_reason} IN ('lang_uncertain', 'high_ppl'), false)"
+    return enriched.selectExpr(
+        *[f"`{c.replace('`', '``')}`" for c in passthrough],
+        "m.lang_pred AS lang_pred",
+        "m.lang_conf AS lang_conf",
+        "m.ppl AS ppl",
+        f"CASE WHEN NOT {early} THEN m.patterns_matched END AS patterns_matched",
+        f"CASE WHEN NOT {early} THEN m.total_hits END AS total_hits",
+        f"CASE WHEN {final_reason} IS NULL THEN m.scrubbed_text END AS scrubbed_text",
+        f"CASE WHEN {final_reason} IS NULL THEN m.bytes_scrubbed END AS bytes_scrubbed",
+        f"CASE WHEN NOT {early} THEN m.tox_hits END AS tox_hits",
+        f"{final_reason} IS NULL AS keep",
+        f"{final_reason} AS drop_reason",
     )

@@ -4,6 +4,17 @@ Tuned for the sandbox (local[N], 32 cores) but every conf is the one we
 would set on a 1000-executor cluster too: AQE on (coalesce + skew-join),
 Arrow batches sized for large text rows, UTC session TZ so the DuckDB
 oracle comparison is stable (DuckDB timestamps are UTC-naive).
+
+DataFrame debugging is off (``spark.python.sql.dataFrameDebugging.enabled``).
+With it on, PySpark wraps every ``F.*`` and Column call in a call-site
+capture that reads the active session, a conf and sets/clears the JVM's
+current origin over py4j: about 650 of the ~1,000 round trips one
+pipeline batch spent building its plan (BENCH/BASELINE.md finding 13).
+What that gives up: an analysis error loses the Python call-site
+fragment of its DataFrame context; its error class and message
+(``UNRESOLVED_COLUMN`` naming the column and the suggestions) stay. The
+conf is static and PySpark caches it process-wide on first use, so it
+is set here, where the session is created.
 """
 
 from __future__ import annotations
@@ -72,6 +83,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        # no py4j call-site capture per Column call (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master is not None:
         b = b.master(master)

@@ -15,7 +15,7 @@ import pathlib
 import pyspark.sql.functions as F
 import pytest
 
-from run_pipeline import run
+from run_pipeline import _batch_plan, _list_inputs, run
 from streamcorpus_filter_spark.catalog import SnapshotCatalog
 from streamcorpus_filter_spark.synth import write_pages_parquet
 
@@ -517,3 +517,107 @@ def test_settle_reaudits_with_the_staging_runs_threshold(
     # the crashed batch leaking through
     assert r["status"] == "committed"
     assert cat.latest_snapshot()["metrics"]["min_keep_ratio"] == 0.0
+
+
+# ------------------------------------------------ the per-batch driver tax
+
+
+def _jobs_launched(spark, group: str, fn):
+    """fn()'s result and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_batch_launches_two_jobs_and_up_to_date_none(spark, pages_dir, tmp_path):
+    """A fresh batch runs the pages read's schema inference and the
+    stage write, nothing else; listing the input dir and the up-to-date
+    rerun launch no job at all (the inferring listing made it 3 and 1)."""
+    table = str(tmp_path / "t")
+    r, n = _jobs_launched(spark, "batch-fresh", lambda: run(
+        spark, pages_dir, table, from_html=True, resume=True,
+        partition_by="keep,ds"))
+    assert r["status"] == "committed"
+    assert n == 2
+    r, n = _jobs_launched(spark, "batch-up-to-date", lambda: run(
+        spark, pages_dir, table, from_html=True, resume=True))
+    assert r == {"status": "up-to-date", "snapshot": None}
+    assert n == 0
+
+
+def _tiny_parquet(path: pathlib.Path) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path.parent.mkdir(parents=True, exist_ok=True)
+    pq.write_table(pa.table({"x": [1, 2]}), str(path))
+
+
+def test_listing_matches_the_inferring_read(spark, tmp_path):
+    """_list_inputs lists what a plain parquet read of the dir lists:
+    partition dirs walked; _SUCCESS and dot-files skipped; names with a
+    space, a '%' or a '[' given as the same URI strings."""
+    parted = tmp_path / "parted"
+    for p in ("crawl=2024-01/a.parquet", "crawl=2024-01/b.parquet",
+              "crawl=2024-02/c.parquet"):
+        _tiny_parquet(parted / p)
+    flat = tmp_path / "flat"
+    for p in ("plain.parquet", "a b%20c[1].parquet", ".hidden.parquet"):
+        _tiny_parquet(flat / p)
+    (flat / "_SUCCESS").touch()
+
+    for d, n in ((parted, 3), (flat, 2)):
+        got = _list_inputs(spark, str(d))
+        assert got == sorted(spark.read.parquet(str(d)).inputFiles())
+        assert len(got) == n
+
+
+def test_empty_input_dir_is_up_to_date_missing_dir_raises(spark, tmp_path):
+    """An empty input dir has nothing to do (schema inference used to
+    fail on it with UNABLE_TO_INFER_SCHEMA); a missing one is an error."""
+    from pyspark.errors import AnalysisException
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    table = str(tmp_path / "t")
+    assert run(spark, str(empty), table) == {"status": "up-to-date", "snapshot": None}
+    with pytest.raises(AnalysisException) as e:
+        run(spark, str(tmp_path / "missing"), table)
+    assert e.value.getCondition() == "PATH_NOT_FOUND"
+
+
+def test_batch_plan_round_trip_budget(spark, pages_dir, monkeypatch):
+    """Building one batch's plan (pages read through observe) stays
+    within a py4j round-trip budget: ~1,000 with Column-builder
+    expressions under PySpark's DataFrame debugging, ~350 with the
+    debugging off, ~165-210 with the cascade and the audit aggregations
+    sent as SQL text.
+    The session factory turns the debugging off, and analysis errors
+    still name the unresolved column and the candidates."""
+    import py4j.clientserver as cs
+    from pyspark.errors import AnalysisException
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+    files = _list_inputs(spark, pages_dir)
+    calls = 0
+    send = cs.ClientServerConnection.send_command
+
+    def counted(self, command):
+        nonlocal calls
+        calls += 1
+        return send(self, command)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
+    _batch_plan(spark, pages_dir, files, from_html=True, parts=["keep", "ds"])
+    monkeypatch.undo()
+    assert 0 < calls <= 300
+
+    with pytest.raises(AnalysisException) as e:
+        spark.range(1).select("nope")
+    assert e.value.getCondition().startswith("UNRESOLVED_COLUMN")
+    assert "`nope`" in str(e.value) and "`id`" in str(e.value)
