@@ -72,12 +72,25 @@ class SnapshotCatalog:
     """A single logical table rooted at ``root``.
 
     Layout:
-      root/data/<snapshot_id>/...parquet   (one dir per snapshot; the
-                                            partitionBy dirs live inside)
+      root/data/snap=<snapshot_id>/...parquet
+                                           (one dir per snapshot; the
+                                            partitionBy dirs live inside.
+                                            The dir name is a partition
+                                            level, so one scan with
+                                            basePath=data reads many
+                                            snapshots. Tables written
+                                            before this layout have
+                                            data/<snapshot_id> dirs; they
+                                            still read, one scan per dir)
       root/snapshots/<seq>.json            (manifest chain; the filename
                                             is the optimistic-commit claim
                                             on that sequence number)
     """
+
+    # the partition column the snapshot dir level names; a table column
+    # of this name is refused at write time. Not `_`-prefixed: pyarrow's
+    # dataset discovery skips such paths as hidden.
+    _SNAP_COL = "snap"
 
     def __init__(self, root: str) -> None:
         self.root = pathlib.Path(root)
@@ -215,9 +228,20 @@ class SnapshotCatalog:
         would silently drop the concurrent append: a lost update). This
         is Iceberg's serializable commit validation. Plain appends leave
         it None and re-parent freely (their rows conflict with nothing).
+
+        The data dir is ``data/snap=<id>``, so a table column named
+        ``snap`` (any case: Spark resolves names case-insensitively)
+        would clash with the dir's partition value and is refused with
+        ValueError before anything is written.
         """
+        if any(c.lower() == self._SNAP_COL for c in df.columns):
+            raise ValueError(
+                f"column {self._SNAP_COL!r} is reserved: the catalog names "
+                f"each snapshot's data dir {self._SNAP_COL}=<id> — rename "
+                "the column before writing"
+            )
         snap_id = uuid.uuid4().hex[:16]
-        data_dir = self.root / "data" / snap_id
+        data_dir = self.root / "data" / f"{self._SNAP_COL}={snap_id}"
         if bucket_by:
             n, bcols = int(bucket_by[0]), list(bucket_by[1])
             # the only Spark writer that emits bucket-id file names is
@@ -1204,12 +1228,22 @@ class SnapshotCatalog:
         snaps: list[dict],
         deletes: list[dict] | None = None,
     ) -> DataFrame:
-        """Union of the given snapshots' data dirs. Each dir is loaded with
-        its own basePath (snapshot dirs each contain their partitionBy
-        subdirs — one global basePath would make partition discovery treat
-        the snapshot-id level as a partition) and the manifest's recorded
-        schema (so partition values keep their true types AND stay in
-        PartitionFilters for file-level pruning), then unionByName with
+        """The rows of the given snapshots' data dirs.
+
+        One scan when the read set allows it (``_one_scan``): every dir
+        is a ``snap=<id>`` partition of ``data``, so a single
+        ``parquet(*dirs)`` with basePath=data and the manifest schema
+        plus ``snap`` reads them all — one FileScan, one file listing,
+        partition values typed by the manifest schema and kept in
+        PartitionFilters — and ``snap`` is dropped after. Delta and
+        Iceberg read the same way: metadata names the files, one scan
+        reads them.
+
+        Otherwise a union of one scan per dir. Each dir is loaded with
+        its own basePath (an old-layout ``data/<id>`` dir is not a
+        ``key=value`` level, so one global basePath makes Spark refuse
+        the scan with CONFLICTING_DIRECTORY_STRUCTURES) and the
+        manifest's recorded schema, then unionByName with
         allowMissingColumns tolerates schema evolution across snapshots.
 
         ``deletes`` = merge-on-read equality-delete manifests in scope:
@@ -1221,8 +1255,16 @@ class SnapshotCatalog:
         anti-join rides the scan, and compaction folds the keys away
         before they accumulate."""
         from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
+        from pyspark.sql.types import StringType, StructType
 
+        if self._one_scan(snaps, deletes):
+            schema = StructType.fromJson(json.loads(snaps[0]["schema_json"]))
+            return (
+                spark.read.option("basePath", str(self.root / "data"))
+                .schema(schema.add(self._SNAP_COL, StringType()))
+                .parquet(*[self._data_dir(s) for s in snaps])
+                .drop(self._SNAP_COL)
+            )
         dfs = []
         for s in snaps:
             d = self._data_dir(s)
@@ -1255,6 +1297,30 @@ class SnapshotCatalog:
         for df in dfs[1:]:
             out = out.unionByName(df, allowMissingColumns=True)
         return out
+
+    def _one_scan(
+        self, snaps: list[dict], deletes: list[dict] | None
+    ) -> bool:
+        """Whether ``_read_snapshots`` may read ``snaps`` as one scan:
+        at least two snapshots, all in the ``snap=<id>`` layout, with
+        distinct dirs (a file index lists a repeated root once, where the
+        union reads a crash-duplicated dir twice), one ``schema_json``
+        and one ``partition_by`` (Spark refuses a scan whose leaf dirs
+        name different partition columns), no ``bucket_spec`` (the
+        bucketed layout is exposed per snapshot) and no merge-on-read
+        delete in scope (its anti-join applies per snapshot sequence).
+        The 1-snapshot read keeps its own-basePath scan."""
+        names = [pathlib.Path(s["data_dir"]).name for s in snaps]
+        return (
+            len(snaps) >= 2
+            and not deletes
+            and all(n.startswith(f"{self._SNAP_COL}=") for n in names)
+            and len(set(names)) == len(names)
+            and snaps[0].get("schema_json") is not None
+            and len({s.get("schema_json") for s in snaps}) == 1
+            and len({tuple(s.get("partition_by") or ()) for s in snaps}) == 1
+            and not any(s.get("bucket_spec") for s in snaps)
+        )
 
     def _read_bucketed(
         self, spark: SparkSession, s: dict, data_dir: str

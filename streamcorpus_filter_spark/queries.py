@@ -53,8 +53,14 @@ def cached_broadcast(spark: SparkSession, key: str, factory):
     re-pickling the artifact per call — which also keeps executor-side
     lazy deserialization warm (it is keyed by broadcast id). The lock
     stops two threads on a fresh application from broadcasting the same
-    several-MB artifact twice."""
-    k = (spark.sparkContext.applicationId, key)
+    several-MB artifact twice. The application id is read over py4j
+    once per SparkContext and kept on that object: a stopped context's
+    successor is a new object, so the two still key apart."""
+    sc = spark.sparkContext
+    app = getattr(sc, "_scfs_app_id", None)
+    if app is None:
+        app = sc._scfs_app_id = sc.applicationId
+    k = (app, key)
     with _BC_LOCK:
         if k not in _BC_CACHE:
             # PySpark allows one active SparkContext per process, so a new
@@ -64,7 +70,7 @@ def cached_broadcast(spark: SparkSession, key: str, factory):
             # current one, deleting the new application's same-id broadcast.
             for old in [x for x in _BC_CACHE if x[0] != k[0]]:
                 del _BC_CACHE[old]
-            _BC_CACHE[k] = spark.sparkContext.broadcast(factory())
+            _BC_CACHE[k] = sc.broadcast(factory())
         return _BC_CACHE[k]
 
 

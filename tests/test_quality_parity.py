@@ -247,3 +247,71 @@ def test_pipeline_and_queries_share_one_model_broadcast(tmp_path):
     assert len(made) == 2, made
     assert made[1][0] == out["app"] != first[0][0], made
     assert out["alive"] == ["own"]
+
+
+_APP_ID_SCRIPT = r"""
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from py4j import clientserver as cs
+from pyspark import SparkContext
+from streamcorpus_filter_spark.kernels.langid import LangIdModel
+from streamcorpus_filter_spark.operators.quality import run_quality_pipeline
+from streamcorpus_filter_spark.session import get_spark
+
+counts = {"app_id": 0, "langid": 0}
+_send = cs.ClientServerConnection.send_command
+_broadcast = SparkContext.broadcast
+
+def counting_send(self, command):
+    # a py4j method call is "c\n<target>\n<method>\n..."
+    counts["app_id"] += "\napplicationId\n" in command
+    return _send(self, command)
+
+def counting_broadcast(self, value):
+    counts["langid"] += isinstance(value, LangIdModel)
+    return _broadcast(self, value)
+
+cs.ClientServerConnection.send_command = counting_send
+SparkContext.broadcast = counting_broadcast
+
+def pipeline_call(s, pages):
+    before = dict(counts)
+    run_quality_pipeline(s, pages)
+    return {k: counts[k] - before[k] for k in counts}
+
+def session():
+    s = get_spark(app_name="bc-app-id", master="local[1]", shuffle_partitions=1)
+    return s, s.createDataFrame([("u", "some text")], "url string, text string")
+
+s, pages = session()
+first, second = pipeline_call(s, pages), pipeline_call(s, pages)
+s.stop()
+s, pages = session()
+fresh = pipeline_call(s, pages)
+print(json.dumps({"first": first, "second": second, "fresh": fresh}))
+s.stop()
+"""
+
+
+def test_application_id_is_read_once_per_context(tmp_path):
+    """cached_broadcast reads the application id over py4j once per
+    SparkContext: a second run_quality_pipeline call in the same
+    application makes no applicationId JVM call and broadcasts nothing,
+    while a new context after spark.stop() reads its own id and
+    broadcasts the models afresh. Runs in its own process: it stops its
+    session, which would kill the suite's shared one."""
+    import json
+    import pathlib
+    import subprocess
+    import sys
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    r = subprocess.run(
+        [sys.executable, "-c", _APP_ID_SCRIPT, str(repo)],
+        capture_output=True, text=True, timeout=600, cwd=tmp_path,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    out = json.loads(r.stdout.strip().splitlines()[-1])
+    assert out["first"] == {"app_id": 1, "langid": 1}, out
+    assert out["second"] == {"app_id": 0, "langid": 0}, out
+    assert out["fresh"] == {"app_id": 1, "langid": 1}, out
