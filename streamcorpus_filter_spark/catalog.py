@@ -197,7 +197,8 @@ class SnapshotCatalog:
         realization is Spark/Hive bucketing: files carry the bucket id
         in their names, and read() re-exposes the layout as a bucketed
         table so equi-joins on ``cols`` plan NO Exchange on this side).
-        This is the missing piece BENCH/IMHDEMO.md measured: a persisted
+        This is the missing piece the retired near-dup demo measured
+        (BENCH/BASELINE.md, "Retired demo records"): a persisted
         band/key index that is probed every batch should never re-shuffle
         — with the transform recorded in the manifest, the probe join
         shuffles ONLY the day's batch, making probe cost independent of
@@ -1611,14 +1612,16 @@ class SnapshotCatalog:
         """Size/count-triggered compaction recommendation for MoR delete
         accumulation (the bound on delete_keys' read tax). Every
         equality-delete manifest in the CURRENT read scope adds one
-        broadcast anti-join to every scan; BENCH/MORDEMO.md shows the
-        write side is ~free, so an unattended writer can cheaply commit
-        thousands of them — this surface is what a table-maintenance
-        scheduler polls to know when the O(delete-files) read tax has
-        outgrown ``max_delete_files`` and a ``compact()`` (which folds
-        the keys into a rewritten state and drops the anti-joins) pays
-        for itself. Metadata-only: resolves the read set, touches no
-        data files."""
+        broadcast anti-join to every scan; the write side is ~free (a
+        key file whose bytes do not grow with the table — pinned in
+        tests/test_compaction.py, measured at 48k-480k docs in
+        BENCH/BASELINE.md, "Retired demo records"), so an unattended
+        writer can cheaply commit thousands of them — this surface is
+        what a table-maintenance scheduler polls to know when the
+        O(delete-files) read tax has outgrown ``max_delete_files`` and a
+        ``compact()`` (which folds the keys into a rewritten state and
+        drops the anti-joins) pays for itself. Metadata-only: resolves
+        the read set, touches no data files."""
         dels: list[dict] = []
         chain = self.snapshots()
         if chain:

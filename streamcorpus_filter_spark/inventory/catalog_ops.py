@@ -782,7 +782,8 @@ def scan_bucketed(spark: SparkSession, sf: str) -> DataFrame:
     ``compact(bucket_by=(8, [doc_id]))`` rewrites it to bucket layout
     (the rewrite-to-spec maintenance job), and a batch probe then
     equi-joins against the catalog read. The in-query plan asserts
-    pin the at-scale claim BENCH/IMHDEMO.md could only approximate with
+    pin the at-scale claim the retired near-dup demo (BENCH/BASELINE.md,
+    "Retired demo records") could only approximate with
     a Hive stand-in before: the index side is a bucketed scan with NO
     Exchange — only the day's batch shuffles, so probe cost is
     independent of corpus history at 10^12 docs. Broadcast is disabled

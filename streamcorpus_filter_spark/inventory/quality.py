@@ -702,7 +702,8 @@ def _pipeline_full_oracle() -> str:
     # shifted-slice form below replaces the correlated UNNEST(range())
     # + per-position substring + lead() window, which DuckDB planned as
     # a delim join (95 s of operator time = 80% of the whole 106-query
-    # sweep's oracle wall, as timed by tools/time_queries.py).
+    # sweep's oracle wall, as timed by the retired per-query timer —
+    # BENCH/BASELINE.md, "Retired demo records").
     byte_expr = (
         "list_transform(regexp_extract_all(hex(encode(lower(txt))), '..'),"
         " x -> CAST(('0x' || x) AS BIGINT))"

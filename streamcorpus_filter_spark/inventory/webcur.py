@@ -1189,8 +1189,9 @@ def dedup_incremental_minhash(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: index build is one pass over new data per snapshot
     (shingle -> 32 affine perms of one md5 -> 16 band keys, all
     map-side-combinable minima); the probe never touches seen TEXT
-    except for the candidate slice (semi-join pattern, same rationale
-    as verify_pairs_jaccard); batch-vs-index is a hash equi-join on
+    except for the candidate slice (a broadcast semi-join on the
+    candidate ids, plan-guarded in tests/test_plan_quality.py);
+    batch-vs-index is a hash equi-join on
     uniform 128-bit band keys — no window, no all-pairs, no skew key.
     At 10^12 seen docs the index is ~16 rows/doc of fixed width, laid
     out partitioned by band — exactly the build-once/probe-per-batch
@@ -1240,9 +1241,10 @@ def dedup_incremental_minhash(spark: SparkSession, sf: str) -> DataFrame:
     WITH batch AS ({_IMH_BATCH_SPARK}),
     cand_docs AS (
       -- BROADCAST the candidate-id set: a shuffle semi-join here would
-      -- move the whole seen corpus (measured in BENCH/IMHDEMO.md before
-      -- the hint: this join's twin was ~70% of probe shuffle and grew
-      -- linearly with seen size); candidates are band-collision-bounded
+      -- move the whole seen corpus (measured before the hint: this
+      -- join's twin was ~70% of probe shuffle and grew linearly with
+      -- seen size; BENCH/BASELINE.md, Retired demo records);
+      -- candidates are band-collision-bounded
       SELECT /*+ BROADCAST(c) */ d.doc_id, d.text FROM docs_v d
       LEFT SEMI JOIN imh_cands_v c ON c.doc_id = d.doc_id
     ),

@@ -1,18 +1,18 @@
-"""Dedup & similarity building blocks (training-data-pipeline operators).
+"""Dedup & similarity building blocks shared by the registered queries.
 
 All-DataFrame implementations where Spark can express the semantics
-(shingling, MinHash via xxhash64, LSH banding, cosine via higher-order
-array functions); numpy-in-pandas only for the SimHash bit kernel and the
-random-hyperplane bucketing, which Spark lacks.
+(word shingling, exact shingle Jaccard, cosine via higher-order array
+functions); numpy-in-pandas only for the SimHash bit kernel, which
+Spark lacks. MinHash-LSH is not here: ``dedup_minhash_lsh`` and
+``dedup_incremental_minhash`` share the md5 hash family in
+``inventory/_minhash.py``, which the DuckDB oracle recomputes
+bit-identically.
 
 Scale notes (the 100TB story):
   * shingle self-joins are keyed equi-joins (shuffle on shingle hash) with
     doc-pair aggregation — never a cartesian
-  * MinHash-LSH: signatures are per-doc aggs (one shuffle on doc), band
-    buckets are an equi-join key; candidate verification is exact Jaccard
-    on the candidates only
-  * brute-force ANN broadcasts the (small) query set so the corpus side
-    never shuffles; the LSH variant turns it into an equi-join on bucket
+  * cosine stays JVM-side, so brute-force ANN can broadcast the (small)
+    query set and the corpus side never shuffles
 """
 
 from __future__ import annotations
@@ -25,34 +25,21 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 
-def word_shingles(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, hashed: bool = False
-) -> DataFrame:
-    """Distinct word k-gram shingles: (id, shingle). Built-ins only.
-
-    ``hashed=True`` emits the shingle as an int64 ``xxhash64`` over the
-    k token strings directly (variadic native hash — no gram STRING is
-    ever materialized) instead of the space-joined gram text. Jaccard
-    over hashed shingles equals Jaccard over strings up to ~n^2/2^64
-    collisions, downstream join keys shrink to 8 bytes, and skipping
-    the per-gram concat_ws allocation alone cut the 48k-page demo's
-    shingle stage ~25% — use it everywhere the shingle text itself is
-    not the output."""
+def word_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
+    """Distinct word k-gram shingles: (id, shingle). Built-ins only."""
     toks = F.filter(F.split(F.col(text_col), "[ \\t\\n\\r\\f\\x0B]+"), lambda x: x != "")
     df = df.select(F.col(id_col).alias("_id"), toks.alias("_toks"))
 
     def gram(i):
-        parts = [F.element_at("_toks", i + j) for j in range(k)]
-        return F.xxhash64(*parts) if hashed else F.concat_ws(" ", *parts)
+        return F.concat_ws(" ", *[F.element_at("_toks", i + j) for j in range(k)])
 
-    empty = F.array().cast("array<bigint>" if hashed else "array<string>")
     # sequence(1, n) with n < 1 DESCENDS ([1, 0]) instead of being empty,
     # and element_at(_toks, 0) then throws — docs shorter than one
     # shingle must short-circuit to an empty gram array
     grams = F.when(
         F.size("_toks") >= k,
         F.transform(F.sequence(F.lit(1), F.size("_toks") - (k - 1)), gram),
-    ).otherwise(empty)
+    ).otherwise(F.array().cast("array<string>"))
     return (
         df.select("_id", F.explode(F.array_distinct(grams)).alias("shingle"))
         .select(F.col("_id").alias(id_col), "shingle")
@@ -109,146 +96,6 @@ def jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-    )
-
-
-def verify_pairs_jaccard(
-    cands: DataFrame,
-    shingles: DataFrame,
-    id_col: str,
-    threshold: float,
-    *,
-    max_broadcast_ids: int = 10_000_000,
-) -> DataFrame:
-    """Exact Jaccard computed ONLY on candidate pairs (a, b) — the LSH
-    scale path: join each side to its collected shingle set, then
-    intersect/union via array built-ins. Work is proportional to the
-    candidate count, never to all pairs sharing a shingle (which is what
-    LSH exists to avoid). Returns (a, b, jaccard) with jaccard >= threshold.
-
-    The shingle table is semi-joined to the candidate doc ids BEFORE the
-    collect_set: without it the verify stage shuffles every doc's full
-    shingle list even though only candidate docs are ever looked at —
-    measured 18s vs 3s at 21M shingle rows / 3.3k candidates, and at
-    crawl scale the difference is the whole corpus vs the near-dup slice.
-
-    The id set is BROADCAST explicitly: left with a shuffle semi-join,
-    the stream side is the corpus's entire shingle table, so its shuffle
-    bytes grow with corpus size even though the output is candidates-only
-    (measured in BENCH/IMHDEMO.md: 214 MB -> 719 MB probe shuffle across
-    a 4x seen-corpus growth, all of it this semi-join). Candidate ids are
-    bounded by the band-collision count — orders of magnitude below the
-    corpus — so the broadcast turns the verify into a scan-side filter
-    with ZERO corpus-side shuffle; only the filtered candidate shingles
-    (seen-size-independent) shuffle into collect_set.
-
-    The broadcast is guarded, not unconditional: on a pathological input
-    (dirty corpus, too-low band/threshold) candidates can approach corpus
-    size, and a forced broadcast of that id set is a driver/executor OOM
-    where a shuffle semi-join is merely slow. One count() prices the set;
-    past ``max_broadcast_ids`` (10M ids ≈ 80 MB of BIGINTs, comfortably
-    broadcastable) the plan falls back to the shuffle semi-join — the
-    escape hatch size-based planning would have provided."""
-    ids = (
-        cands.select(F.col("a").alias(id_col))
-        .unionByName(cands.select(F.col("b").alias(id_col)))
-        .distinct()
-        # materialize once: the guard's count() and the semi-join below
-        # would otherwise each re-execute the candidate-generation plan
-        # (typically a band equi-join) from scratch
-        .localCheckpoint(eager=True)
-    )
-    if ids.count() <= max_broadcast_ids:
-        ids = F.broadcast(ids)
-    sets_ = (
-        shingles.join(ids, id_col, "left_semi")
-        .groupBy(id_col)
-        .agg(F.collect_set("shingle").alias("shset"))
-    )
-    sa = sets_.select(F.col(id_col).alias("a"), F.col("shset").alias("sh_a"))
-    sb = sets_.select(F.col(id_col).alias("b"), F.col("shset").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (
-        cands.join(sa, "a")
-        .join(sb, "b")
-        .withColumn(
-            "jaccard", inter / (F.size("sh_a") + F.size("sh_b") - inter)
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-    )
-
-
-def minhash_signatures(
-    shingles: DataFrame, id_col: str, n_perm: int = 32
-) -> DataFrame:
-    """(id, sig: array<bigint>) — perm i = min over shingles of
-    xxhash64(i, shingle). One aggregation, JVM-side hashing.
-
-    Perms hash (lit(i), shingle) VARIADICALLY: xxhash64 folds the seed
-    int and the shingle as fixed-width native values. The obvious
-    alternative — hashing the string concat "i|shingle" — paid a
-    cast-to-string + concat allocation per (shingle, perm), and at 21M
-    shingles x 32 perms that was 98s of a 163s job (profiled on the
-    48k-page demo); the variadic form does the same stage in a few
-    seconds because no string is ever built."""
-    hashed = shingles.select(
-        id_col,
-        *[
-            F.xxhash64(F.lit(i), F.col("shingle")).alias(f"h{i}")
-            for i in range(n_perm)
-        ],
-    )
-    agg = hashed.groupBy(id_col).agg(
-        *[F.min(f"h{i}").alias(f"m{i}") for i in range(n_perm)]
-    )
-    return agg.select(
-        id_col, F.array(*[F.col(f"m{i}") for i in range(n_perm)]).alias("sig")
-    )
-
-
-def lsh_band_keys(
-    sigs: DataFrame, id_col: str, n_perm: int = 32, bands: int = 8
-) -> DataFrame:
-    """(id, band, bh): the LSH band keys of each MinHash signature —
-    the PERSISTABLE index artifact (dedup_incremental_minhash stores
-    exactly this shape in a SnapshotCatalog table; at 10^12 docs the
-    table would be written with an Iceberg bucket(bh) partition
-    transform so probes co-partition against it without re-shuffling
-    the index). Band hash is variadic native xxhash64 over the band's
-    signature slots — no cast-to-string/concat per band."""
-    rows = n_perm // bands
-    return sigs.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.xxhash64(
-                            *[F.col("sig")[bi * rows + j] for j in range(rows)]
-                        ).alias("bh"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bh")
-
-
-def lsh_candidate_pairs(
-    sigs: DataFrame, id_col: str, n_perm: int = 32, bands: int = 8
-) -> DataFrame:
-    """Band the signatures (rows = n_perm/bands) and equi-join on
-    (band, band-hash) to get candidate pairs (a < b), deduplicated."""
-    banded = lsh_band_keys(sigs, id_col, n_perm, bands)
-    a = banded.select(F.col(id_col).alias("a"), "band", "bh")
-    b = banded.select(F.col(id_col).alias("b"), "band", "bh")
-    return (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
     )
 
 

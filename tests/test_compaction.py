@@ -1037,6 +1037,38 @@ def test_mor_delete_anti_join_is_broadcast(spark, tmp_path):
     assert "SortMergeJoin" not in plan, plan
 
 
+def test_mor_delete_bytes_do_not_grow_with_the_table(spark, tmp_path):
+    """Deleting the same keys from a 1k-row and a 20k-row table:
+    delete_keys commits a key file of the SAME bytes to both, while
+    delete_where rewrites each table, so its commit grows with it. Bytes
+    are the contents of the data dir each commit added."""
+
+    def dir_bytes(m):
+        return sum(
+            f.stat().st_size for f in pathlib.Path(m["data_dir"]).rglob("*")
+            if f.is_file()
+        )
+
+    mor, cow = [], []
+    for n in (1_000, 20_000):
+        tbl = _rng(spark, 0, n).withColumn(
+            "payload", F.sha2(F.col("doc_id").cast("string"), 256)
+        )
+        c = SnapshotCatalog(str(tmp_path / f"mor_{n}"))
+        c.append(tbl)
+        m = c.delete_keys(spark, _keys(spark, 1, 3, 5), ["doc_id"])
+        assert m["metrics"]["deleted_records"] == 3
+        mor.append(dir_bytes(m))
+        c = SnapshotCatalog(str(tmp_path / f"cow_{n}"))
+        c.append(tbl)
+        m = c.delete_where(spark, "doc_id IN (1, 3, 5)")
+        assert m["metrics"]["deleted_records"] == 3
+        cow.append(dir_bytes(m))
+    assert mor[0] == mor[1], (mor, cow)
+    assert cow[1] > 5 * cow[0], (mor, cow)
+    assert mor[0] < cow[0], (mor, cow)
+
+
 def test_mor_delete_rollback_and_branch_interplay(spark, tmp_path):
     c = SnapshotCatalog(str(tmp_path / "tbl"))
     s0 = c.append(_rng(spark, 0, 4))

@@ -283,7 +283,8 @@ def test_substring_spans_no_null_window(spark):
 
 
 def test_bucketed_index_join_has_no_index_side_exchange(spark, tmp_path):
-    """The IMHDEMO at-scale claim, codified: an equi-join between a
+    """The incremental near-dup demo's at-scale claim, codified
+    (BENCH/BASELINE.md, "Retired demo records"): an equi-join between a
     Hive-bucketed index table (bucketBy on the join key — the sandbox
     stand-in for Iceberg's bucket(bh) transform) and a non-bucketed
     probe side plans an Exchange ONLY on the probe side. The persisted
@@ -325,39 +326,26 @@ def test_bucketed_index_join_has_no_index_side_exchange(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
-def test_verify_pairs_candidate_semijoin_is_broadcast(spark):
-    """verify_pairs_jaccard must BROADCAST the candidate-id set into its
-    shingle semi-join. Left to size-based planning the semi-join sort-
-    merge-shuffles the STREAM side — the corpus's entire shingle table —
-    so probe shuffle grows with corpus history even though the output is
-    candidates-only (measured in BENCH/IMHDEMO.md: 214 MB -> 719 MB
-    across a 4x seen-corpus growth before the hint). Candidate ids are
-    band-collision-bounded, orders of magnitude below the corpus, so the
-    broadcast turns the verify into a scan-side filter."""
-    import pyspark.sql.functions as F
+def test_incremental_minhash_candidate_semijoin_is_broadcast(spark):
+    """dedup_incremental_minhash must BROADCAST the candidate-id set into
+    the semi-join that picks the seen docs to verify. Left to size-based
+    planning the semi-join sort-merge-shuffles the STREAM side — the
+    whole seen corpus — so probe shuffle grows with corpus history even
+    though the output is candidates-only (measured before the hint:
+    this join's twin was ~70% of probe shuffle; BENCH/BASELINE.md,
+    "Retired demo records"). Candidate ids are band-collision-bounded,
+    orders of magnitude below the corpus, so the broadcast turns the
+    verify into a scan-side filter."""
+    import re
 
-    from streamcorpus_filter_spark.operators.dedup import (
-        verify_pairs_jaccard,
-        word_shingles,
-    )
+    from streamcorpus_filter_spark import queries as reg
 
     prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     # prove it's the explicit hint, not size-based auto-broadcast
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        docs = spark.range(200).select(
-            F.col("id").alias("doc_id"),
-            F.concat(F.lit("alpha beta gamma delta epsilon zeta "),
-                     F.col("id").cast("string")).alias("text"),
-        )
-        sh = word_shingles(docs, "doc_id", "text", k=3, hashed=True)
-        cands = spark.range(5).select(
-            F.col("id").alias("a"), (F.col("id") + 100).alias("b"))
-        plan = plan_of(verify_pairs_jaccard(cands, sh, "doc_id", 0.5))
-        assert "LeftSemi" in plan, plan
-        assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
-        import re
-
+        plan = plan_of(reg.QUERIES["dedup_incremental_minhash"](spark, SF_SMALL))
+        assert re.search(r"BroadcastHashJoin LeftSemi", plan), plan
         assert not re.search(r"SortMergeJoin.*LeftSemi", plan), plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)

@@ -76,6 +76,24 @@ def test_spark_submit_py_files_zip_end_to_end():
     assert sum(lineage["docs_seen"]) == 300
 
 
+def test_get_spark_is_the_only_session_factory():
+    """Spark-free layering guard: outside session.py, no program file
+    builds a SparkSession itself. A second builder would skip get_spark's
+    confs and its rule of leaving a launcher's --master alone. Tests and
+    perfbench are exempt: they pin their own small local sessions."""
+    offenders = []
+    for p in sorted(REPO.rglob("*.py")):
+        rel = p.relative_to(REPO)
+        if rel.as_posix() == "streamcorpus_filter_spark/session.py" or (
+            rel.parts[0] in ("tests", "perfbench")
+        ) or any(part.startswith(".") for part in rel.parts):
+            continue
+        for n, line in enumerate(p.read_text().splitlines(), 1):
+            if "SparkSession.builder" in line:
+                offenders.append(f"{rel}:{n}: {line.strip()}")
+    assert not offenders, "\n".join(offenders)
+
+
 def test_task_slots_parser():
     from streamcorpus_filter_spark.session import _task_slots
 
