@@ -15,5 +15,6 @@ Registered families (SURVEY.md §2 plus the training-data extras):
   udf_surface — one row per Python UDF/UDAF/UDTF execution mechanism
 
 Shared helpers (register nothing): twins (the planted near-dup fixture),
-_minhash, _pq and _text (leaf constants and tokenizers).
+_minhash, _pq and _text (leaf constants and tokenizers), _scratch (the
+per-process scratch root every query's temp table lives under).
 """

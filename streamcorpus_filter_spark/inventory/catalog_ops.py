@@ -13,13 +13,12 @@ resume analog: re-feeding only unprocessed chunk files.
 
 from __future__ import annotations
 
-import tempfile
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import SnapshotCatalog
 from ..queries import load, register
+from ._scratch import scratch_dir
 from ._text import md5_bucket_sql
 
 
@@ -33,7 +32,7 @@ from ._text import md5_bucket_sql
 def sink_partitioned(spark: SparkSession, sf: str) -> DataFrame:
     """Partitioned snapshot write + read-back: documents partitioned by
     (lang, source); the aggregation runs over the round-tripped table."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="sink_part_"))
+    cat = SnapshotCatalog(scratch_dir("sink_part_"))
     cat.append(load(spark, sf, "documents"), partition_by=["lang", "source"])
     return (
         cat.read(spark)
@@ -52,7 +51,7 @@ def scan_iceberg_snapshot(spark: SparkSession, sf: str) -> DataFrame:
     """Snapshot-id (time-travel) read: append even docs, then odd docs;
     read as-of the first snapshot -> exactly the even docs, untouched by
     the later append."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="scan_snap_"))
+    cat = SnapshotCatalog(scratch_dir("scan_snap_"))
     docs = load(spark, sf, "documents").select("doc_id", "n_chars")
     s1 = cat.append(docs.where(F.col("doc_id") % 2 == 0))
     cat.append(docs.where(F.col("doc_id") % 2 == 1))
@@ -71,7 +70,7 @@ def scan_iceberg_incremental(spark: SparkSession, sf: str) -> DataFrame:
     must return exactly the rows of snapshots 2+3 and nothing from the
     base — the read path a downstream consumer uses to process only new
     crawl data per run instead of rescanning the table."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="scan_incr_"))
+    cat = SnapshotCatalog(scratch_dir("scan_incr_"))
     docs = load(spark, sf, "documents").select("doc_id", "n_chars")
     s1 = cat.append(docs.where(F.col("doc_id") % 3 == 0))
     cat.append(docs.where(F.col("doc_id") % 3 == 1))
@@ -91,7 +90,7 @@ def scan_iceberg_incremental(spark: SparkSession, sf: str) -> DataFrame:
 def sink_metrics(spark: SparkSession, sf: str) -> DataFrame:
     """Metrics-table sink: per-source counters appended to a metrics
     snapshot (the run_pipeline.py lineage-table shape), read back."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="sink_metrics_"))
+    cat = SnapshotCatalog(scratch_dir("sink_metrics_"))
     m = (
         load(spark, sf, "documents")
         .groupBy("source")
@@ -117,13 +116,13 @@ def ql_checkpoint_resume(spark: SparkSession, sf: str) -> DataFrame:
     --resume run anti-selects the manifest's processed inputs and handles
     the rest; the union of snapshots must equal a one-shot run (oracle =
     the filter over the whole fixture)."""
-    src = tempfile.mkdtemp(prefix="resume_in_")
+    src = scratch_dir("resume_in_")
     docs = load(spark, sf, "documents")
     for i in range(3):
         docs.where(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(
             f"{src}/chunk-{i}", mode="overwrite"
         )
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="resume_out_"))
+    cat = SnapshotCatalog(scratch_dir("resume_out_"))
 
     def process(files: list[str]) -> None:
         df = spark.read.parquet(*files).where(F.col("n_chars") > 100)
@@ -156,7 +155,7 @@ def sink_compact(spark: SparkSession, sf: str) -> DataFrame:
     aggregation runs over the compacted-plus-appended read — so chain
     truncation, content preservation through the rewrite, and
     append-after-replace are all inside the oracle comparison."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="sink_compact_"))
+    cat = SnapshotCatalog(scratch_dir("sink_compact_"))
     docs = load(spark, sf, "documents")
     for i in range(4):
         cat.append(docs.where((F.col("doc_id") % 5 == i)))
@@ -184,7 +183,7 @@ def sink_expire_snapshots(spark: SparkSession, sf: str) -> DataFrame:
     the driver row), one more append lands after expiry, and the final
     aggregation must still equal the oracle over the original fixture —
     i.e. storage reclaim changed nothing logical."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="sink_expire_"))
+    cat = SnapshotCatalog(scratch_dir("sink_expire_"))
     docs = load(spark, sf, "documents")
     for i in range(4):
         cat.append(docs.where(F.col("doc_id") % 5 == i))
@@ -215,7 +214,7 @@ def scan_schema_evolution(spark: SparkSession, sf: str) -> DataFrame:
     the new column — no rewrite of existing data, which is the property
     that makes adding a column to a 100 TB table an O(metadata) change.
     The oracle recomputes the expected NULL pattern from the fixture."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="scan_evol_"))
+    cat = SnapshotCatalog(scratch_dir("scan_evol_"))
     docs = load(spark, sf, "documents")
     cat.append(docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "n_chars"))
     cat.append(
@@ -247,7 +246,7 @@ def sink_upsert(spark: SparkSession, sf: str) -> DataFrame:
     keys must be REPLACED (not duplicated), unmatched rows carried
     forward untouched, new keys appended, all as one REPLACE commit the
     oracle recomputes with CASE arms over the original fixture."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="sink_upsert_"))
+    cat = SnapshotCatalog(scratch_dir("sink_upsert_"))
     docs = load(spark, sf, "documents").select("doc_id", "n_chars", "lang")
     seeded = docs.where(F.col("doc_id") % 11 != 0)
     cat.append(seeded.where(F.col("doc_id") % 2 == 0))
@@ -283,7 +282,7 @@ def sink_delete_where(spark: SparkSession, sf: str) -> DataFrame:
     metadata no-op (asserted in-query: same snapshot id) rather than a
     pointless full-table rewrite. The oracle recomputes the survivors
     straight off the fixture with the negated predicate."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="sink_delete_"))
+    cat = SnapshotCatalog(scratch_dir("sink_delete_"))
     docs = load(spark, sf, "documents").select(
         "doc_id", "n_chars", "lang", "source"
     )
@@ -319,7 +318,7 @@ def scan_table_history(spark: SparkSession, sf: str) -> DataFrame:
     — append grows the count, merge shrinks it by the deleted slice,
     replace holds it flat. The provenance read a dataset consumer runs
     before trusting a table."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="scan_hist_"))
+    cat = SnapshotCatalog(scratch_dir("scan_hist_"))
     docs = load(spark, sf, "documents").select("doc_id", "n_chars", "lang")
     cat.append(docs.where(F.col("doc_id") % 2 == 0))
     cat.append(docs.where(F.col("doc_id") % 2 == 1))
@@ -349,7 +348,7 @@ def sink_sorted_layout(spark: SparkSession, sf: str) -> DataFrame:
     clustered table against the fixture oracle."""
     import pyarrow.parquet as pq
 
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="sink_sorted_"))
+    cat = SnapshotCatalog(scratch_dir("sink_sorted_"))
     docs = load(spark, sf, "documents").select("doc_id", "n_chars", "lang")
     clustered = docs.repartitionByRange(8, "n_chars").sortWithinPartitions(
         "n_chars"
@@ -402,7 +401,7 @@ def scan_partition_evolution(spark: SparkSession, sf: str) -> DataFrame:
     table this is the difference between re-laying-out history to change
     a partition key and an O(metadata) spec change that only affects new
     writes. Value-checked by aggregating across both layouts."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="scan_pevo_"))
+    cat = SnapshotCatalog(scratch_dir("scan_pevo_"))
     docs = load(spark, sf, "documents").select(
         "doc_id", "n_chars", "lang", "source"
     )
@@ -431,7 +430,7 @@ def scan_tagged_release(spark: SparkSession, sf: str) -> DataFrame:
     (Iceberg's retention rule), so read(tag="train-v1") still returns
     exactly the even docs the oracle recomputes, byte-for-byte, after
     the GC ran. An untagged sibling of that vintage would be gone."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="scan_tag_"))
+    cat = SnapshotCatalog(scratch_dir("scan_tag_"))
     docs = load(spark, sf, "documents").select("doc_id", "n_chars")
     cat.append(docs.where(F.col("doc_id") % 2 == 0))
     cat.tag("train-v1")
@@ -459,7 +458,7 @@ def sink_wap_publish(spark: SparkSession, sf: str) -> DataFrame:
     (read by staged id) already shows the full table, then publish
     cherry-picks the batch to a new head and the final read must match
     the whole-fixture oracle."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="sink_wap_"))
+    cat = SnapshotCatalog(scratch_dir("sink_wap_"))
     docs = load(spark, sf, "documents").select("doc_id", "n_chars")
     cat.append(docs.where(F.col("doc_id") % 2 == 0))
     n_even = cat.read(spark).count()
@@ -525,7 +524,7 @@ def sink_export_shards(spark: SparkSession, sf: str) -> DataFrame:
     each output partition under executor memory, and AQE coalesces the
     skewless hash buckets. The manifest agg is map-side combinable on
     the same key, so it adds one ~SHARDS-row shuffle."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="sink_export_"))
+    cat = SnapshotCatalog(scratch_dir("sink_export_"))
     docs = load(spark, sf, "documents").select(
         "doc_id", "text", "n_chars",
         F.expr(_shard_sql("instr", "STRING")).cast("long").alias("shard"),
@@ -572,7 +571,7 @@ def sink_rollback(spark: SparkSession, sf: str) -> DataFrame:
     not representable as an append delta; the consumer must re-read or
     resume from after it), mirroring Iceberg's incremental-scan error
     on overwrite snapshots."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="sink_rollback_"))
+    cat = SnapshotCatalog(scratch_dir("sink_rollback_"))
     docs = load(spark, sf, "documents").select("doc_id", "n_chars", "lang")
     good = cat.append(docs.where(F.col("doc_id") % 2 == 0))
     bad = cat.append(
@@ -623,7 +622,7 @@ def sink_branch_ff(spark: SparkSession, sf: str) -> DataFrame:
     manifest re-commit referencing the same immutable dirs) — the
     experiment-then-promote workflow costs metadata, not a table
     rewrite."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="sink_branch_"))
+    cat = SnapshotCatalog(scratch_dir("sink_branch_"))
     docs = load(spark, sf, "documents").select("doc_id", "n_chars", "lang")
     seed = cat.append(docs.where(F.col("doc_id") % 2 == 0))
     cat.create_branch("ingest")
@@ -671,7 +670,7 @@ def sink_delete_mor(spark: SparkSession, sf: str) -> DataFrame:
     oracle recomputes survivors + re-appends straight off the fixture;
     readers pay a broadcast anti-join until compact() folds the keys
     away (tested in test_compaction.py)."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="sink_mor_"))
+    cat = SnapshotCatalog(scratch_dir("sink_mor_"))
     docs = load(spark, sf, "documents").select("doc_id", "n_chars", "lang")
     cat.append(docs.where(F.col("doc_id") % 2 == 0))
     cat.append(docs.where(F.col("doc_id") % 2 == 1))
@@ -705,7 +704,7 @@ def sink_cherry_pick(spark: SparkSession, sf: str) -> DataFrame:
     whose rows are already visible must refuse (asserted) — that is the
     duplicate-rows guard. Final read = evens + the one redone batch,
     recomputed by the oracle straight off the fixture."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="sink_cherry_"))
+    cat = SnapshotCatalog(scratch_dir("sink_cherry_"))
     docs = load(spark, sf, "documents").select("doc_id", "n_chars", "lang")
     s0 = cat.append(docs.where(F.col("doc_id") % 2 == 0))
     cat.append(docs.where("doc_id % 4 = 1"))  # undone and NOT redone
@@ -749,7 +748,7 @@ def scan_partitions_metadata(spark: SparkSession, sf: str) -> DataFrame:
     manifests + parquet footers alone, no data-page scan. This is the
     query an operator runs BEFORE deciding to compact: it exposes
     small-file accumulation per partition at metadata cost."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="scan_parts_"))
+    cat = SnapshotCatalog(scratch_dir("scan_parts_"))
     docs = load(spark, sf, "documents").select("doc_id", "lang", "n_chars")
     cat.append(
         docs.where(F.col("doc_id") % 2 == 0).coalesce(1),
@@ -792,7 +791,7 @@ def scan_bucketed(spark: SparkSession, sf: str) -> DataFrame:
     import re
 
     docs = load(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="scan_bkt_"))
+    cat = SnapshotCatalog(scratch_dir("scan_bkt_"))
     cat.append(docs.where(F.col("doc_id") % 2 == 0))
     cat.append(docs.where(F.col("doc_id") % 2 == 1))
     # COMPOSED multi-transform spec (Iceberg: e.g. days(ts) +
@@ -849,7 +848,7 @@ def sink_maintenance_compact(spark: SparkSession, sf: str) -> DataFrame:
     (asserted in-query). This is the loop a table-maintenance scheduler
     runs at 100 TB: poll metadata, compact only when the delete-file
     count crosses the threshold."""
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="sink_maint_"))
+    cat = SnapshotCatalog(scratch_dir("sink_maint_"))
     docs = load(spark, sf, "documents").select("doc_id", "lang", "n_chars")
     cat.append(docs)
     for mod, part in ((11, 0), (11, 1), (11, 2), (13, 0), (13, 1), (13, 2)):

@@ -977,9 +977,8 @@ def sim_ann_persisted(spark: SparkSession, sf: str) -> DataFrame:
     cells, codes, LUT, ADC), so the DuckDB oracle recomputes the
     identical shortlist at any sf. Composes sim_ivf_topk's integer IVF
     with emb_pq_quantize's codebook scheme."""
-    import tempfile
-
     from ..catalog import SnapshotCatalog
+    from ._scratch import scratch_dir
     from ._pq import PQ_K, PQ_M, PQ_SUB
     from .selection import _pq_codebook
 
@@ -1014,7 +1013,7 @@ def sim_ann_persisted(spark: SparkSession, sf: str) -> DataFrame:
     )
     idx_df = e.select("vec_id", "embedding").mapInPandas(build_index, schema=schema)
 
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="ann_index_"))
+    cat = SnapshotCatalog(scratch_dir("ann_index_"))
     cat.append(idx_df.where(F.col("vec_id") % 2 == 0))
     cat.append(idx_df.where(F.col("vec_id") % 2 == 1))
     index = cat.read(spark)

@@ -12,13 +12,12 @@ the same components with a recursive transitive-closure CTE.
 
 from __future__ import annotations
 
-import tempfile
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.dedup import jaccard_pairs, word_shingles
 from ..queries import load, register
+from ._scratch import scratch_dir
 from .twins import MAX_SHINGLE_DF, TWINNED_SQL as _TWINNED, twinned
 
 
@@ -429,7 +428,7 @@ def _staged(spark: SparkSession, sf: str, fmt: str) -> str:
     oracle data."""
     key = (spark.sparkContext.applicationId, sf, fmt)
     if key not in _SRC_CACHE:
-        d = tempfile.mkdtemp(prefix=f"src_{fmt}_")
+        d = scratch_dir(f"src_{fmt}_")
         docs = load(spark, sf, "documents").coalesce(2)
         if fmt == "warc":
             (docs.select(warc_record("doc_id", "text").alias("value"))

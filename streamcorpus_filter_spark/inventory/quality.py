@@ -973,13 +973,12 @@ def pipeline_incremental_ingest(spark: SparkSession, sf: str) -> DataFrame:
     not the 10^12-row history); the gate is the gopher cascade over
     with_structural_signals; both catalogs are append-only manifest
     commits. Resume cost is O(manifests), not O(data)."""
-    import tempfile
-
     from ..catalog import SnapshotCatalog
+    from ._scratch import scratch_dir
 
     r = rules
-    src = SnapshotCatalog(tempfile.mkdtemp(prefix="incr_src_"))
-    out = SnapshotCatalog(tempfile.mkdtemp(prefix="incr_out_"))
+    src = SnapshotCatalog(scratch_dir("incr_src_"))
+    out = SnapshotCatalog(scratch_dir("incr_out_"))
     docs = load(spark, sf, "documents").select(
         "doc_id", "text", "lang", "n_chars"
     )

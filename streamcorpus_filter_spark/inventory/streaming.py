@@ -18,13 +18,13 @@ asserted in tests/test_streaming.py instead.
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..queries import load, register
+from ._scratch import scratch_dir
 
 EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, "
@@ -42,7 +42,7 @@ def _stage_events(spark: SparkSession, sf: str) -> str:
     paying a coalesce+write each (driver-round time-box, VERDICT r1 §1)."""
     key = (spark.sparkContext.applicationId, sf)
     if key not in _STAGE_CACHE:
-        d = tempfile.mkdtemp(prefix="stream_src_")
+        d = scratch_dir("stream_src_")
         load(spark, sf, "events").coalesce(1).write.parquet(d, mode="overwrite")
         _STAGE_CACHE[key] = d
     return _STAGE_CACHE[key]
@@ -261,7 +261,7 @@ def stream_sink_checkpoint(spark: SparkSession, sf: str) -> DataFrame:
     so the sink holds each row exactly once (re-run idempotence — the
     streaming analog of ql_checkpoint_resume)."""
     src = _stage_events(spark, sf)
-    work = tempfile.mkdtemp(prefix="stream_sink_")
+    work = scratch_dir("stream_sink_")
     out_dir, ckpt = f"{work}/out", f"{work}/ckpt"
     for _ in range(2):
         q = (
@@ -296,7 +296,7 @@ def stream_sink_catalog(spark: SparkSession, sf: str) -> DataFrame:
     from ..catalog import SnapshotCatalog
 
     src = _stage_events(spark, sf)
-    work = tempfile.mkdtemp(prefix="stream_cat_")
+    work = scratch_dir("stream_cat_")
     cat = SnapshotCatalog(f"{work}/tbl")
     # seeded ONCE from the durable manifests, then maintained in memory:
     # re-scanning + JSON-parsing every manifest per micro-batch is
@@ -344,7 +344,7 @@ DOCS_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars b
 def _stage_documents(spark: SparkSession, sf: str) -> str:
     key = (spark.sparkContext.applicationId, sf + "/documents")
     if key not in _STAGE_CACHE:
-        d = tempfile.mkdtemp(prefix="stream_docs_")
+        d = scratch_dir("stream_docs_")
         load(spark, sf, "documents").coalesce(1).write.parquet(d, mode="overwrite")
         _STAGE_CACHE[key] = d
     return _STAGE_CACHE[key]
@@ -420,7 +420,7 @@ def _stage_incr_batch(spark: SparkSession, sf: str) -> str:
                 )
             )
         )
-        out = tempfile.mkdtemp(prefix="stream_batch_")
+        out = scratch_dir("stream_batch_")
         batch.coalesce(1).write.parquet(out, mode="overwrite")
         _BATCH_STAGE[key] = out
     return _BATCH_STAGE[key]
@@ -560,7 +560,7 @@ def _stage_wap_batches(spark: SparkSession, sf: str) -> str:
 
     key = (spark.sparkContext.applicationId, sf + "/wap_batches")
     if key not in _STAGE_CACHE:
-        d = tempfile.mkdtemp(prefix="stream_wap_")
+        d = scratch_dir("stream_wap_")
         docs = load(spark, sf, "documents").select(
             "doc_id", "lang", "n_chars"
         )
@@ -574,7 +574,7 @@ def _stage_wap_batches(spark: SparkSession, sf: str) -> str:
             )
         ]
         for i, b in enumerate(batches):
-            tmp = tempfile.mkdtemp(prefix="wap_part_")
+            tmp = scratch_dir("wap_part_")
             b.coalesce(1).write.parquet(tmp, mode="overwrite")
             part = next(pathlib.Path(tmp).glob("*.parquet"))
             shutil.copy(part, pathlib.Path(d) / f"batch{i}.parquet")
@@ -617,7 +617,7 @@ def stream_sink_wap(spark: SparkSession, sf: str) -> DataFrame:
     from ..catalog import SnapshotCatalog
 
     src = _stage_wap_batches(spark, sf)
-    work = tempfile.mkdtemp(prefix="stream_wap_tbl_")
+    work = scratch_dir("stream_wap_tbl_")
     cat = SnapshotCatalog(f"{work}/tbl")
     schema = "doc_id bigint, lang string, n_chars bigint"
 

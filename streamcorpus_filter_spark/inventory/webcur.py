@@ -1198,9 +1198,8 @@ def dedup_incremental_minhash(spark: SparkSession, sf: str) -> DataFrame:
     artifact dedup_incremental's exact-hash path cannot provide for
     near-dups. Output mirrors dedup_incremental: (new_id, is_dup,
     src_doc = smallest verified seen near-dup)."""
-    import tempfile
-
     from ..catalog import SnapshotCatalog
+    from ._scratch import scratch_dir
 
     load(spark, sf, "documents").createOrReplaceTempView("docs_v")
 
@@ -1217,7 +1216,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf: str) -> DataFrame:
     # Exchange even when the batch is too large to broadcast (the
     # maintenance loop a 10^12-doc index runs; layout cannot change
     # answers — the DuckDB oracle recomputes with no index at all)
-    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="imh_index_"))
+    cat = SnapshotCatalog(scratch_dir("imh_index_"))
     cat.append(seen_bands.where(F.col("doc_id") % 2 == 0))
     cat.append(seen_bands.where(F.col("doc_id") % 2 == 1))
     cat.compact(spark, bucket_by=(8, ["band", "bh"]))

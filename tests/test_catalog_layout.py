@@ -3,7 +3,9 @@ manifest is built by one constructor and committed through one
 sequence-claim loop inside SnapshotCatalog, and no other module knows
 the on-disk manifest layout. Snapshot data dirs are a ``snap=<id>``
 partition level, so a multi-snapshot read is one scan; every other read
-set, old ``data/<id>`` tables included, keeps the per-dir union."""
+set, old ``data/<id>`` tables included, keeps the per-dir union. The
+tables registered queries build live under one per-process scratch root
+that is gone when the process exits."""
 
 from __future__ import annotations
 
@@ -15,6 +17,7 @@ import tempfile
 import pytest
 
 from streamcorpus_filter_spark.catalog import SnapshotCatalog
+from tests.conftest import SF_SMALL
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 CATALOG = ROOT / "streamcorpus_filter_spark" / "catalog.py"
@@ -294,3 +297,61 @@ def test_crash_between_snap_dir_write_and_manifest_claim(
     c.expire_snapshots()
     assert {d.name for d in data.iterdir()} == referenced()
     assert sorted(r.id for r in c.read(spark).select("id").collect()) == ids
+
+
+_SCRATCH_PREFIXES = ("imh_index_", "ann_index_", "sink_export_", "scfs_scratch_")
+_SCRATCH_SCRIPT = r"""
+import json, os, sys, tempfile
+sys.path.insert(0, sys.argv[1])
+from streamcorpus_filter_spark.queries import QUERIES
+from streamcorpus_filter_spark.session import get_spark
+
+s = get_spark(app_name="scratch", master="local[2]", shuffle_partitions=2)
+rows = {q: QUERIES[q](s, sys.argv[2]).count()
+        for q in ("dedup_incremental_minhash", "sim_ann_persisted",
+                  "sink_export_shards")}
+tmp = tempfile.gettempdir()
+made = sorted(os.path.relpath(os.path.join(d, n), tmp)
+              for d, names, _ in os.walk(tmp) for n in names
+              if n.startswith(tuple(sys.argv[3:])))
+print(json.dumps({"rows": rows, "made": made}))
+s.stop()
+"""
+
+
+def test_query_tables_are_removed_at_exit(tmp_path):
+    """Three registered queries that each build a SnapshotCatalog in a
+    temp dir leave none behind once their process exits; while it runs,
+    each table sits under the one scratch root. Its own process with its
+    own TMPDIR, because the removal happens at interpreter exit."""
+    import os
+    import subprocess
+    import sys
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    env = {
+        **os.environ,
+        "TMPDIR": str(tmp),
+        # the Python workers import the package from PYTHONPATH
+        "PYTHONPATH": os.pathsep.join(
+            filter(None, [str(ROOT), os.environ.get("PYTHONPATH")])
+        ),
+    }
+    r = subprocess.run(
+        [sys.executable, "-c", _SCRATCH_SCRIPT, str(ROOT),
+         SF_SMALL, *_SCRATCH_PREFIXES],
+        capture_output=True, text=True, timeout=600, cwd=tmp_path, env=env,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    out = json.loads(r.stdout.strip().splitlines()[-1])
+    assert all(n > 0 for n in out["rows"].values()), out
+    for prefix in _SCRATCH_PREFIXES[:3]:
+        assert any(
+            pathlib.Path(m).name.startswith(prefix) for m in out["made"]
+        ), out["made"]
+    left = [
+        str(p.relative_to(tmp)) for p in tmp.rglob("*")
+        if p.name.startswith(_SCRATCH_PREFIXES)
+    ]
+    assert not left, left

@@ -315,3 +315,160 @@ def test_application_id_is_read_once_per_context(tmp_path):
     assert out["first"] == {"app_id": 1, "langid": 1}, out
     assert out["second"] == {"app_id": 0, "langid": 0}, out
     assert out["fresh"] == {"app_id": 1, "langid": 1}, out
+
+
+def _count_rereads() -> int:
+    """zipimport._read_directory calls made by one
+    importlib.invalidate_caches()."""
+    import importlib
+    import zipimport
+
+    n = 0
+    real = zipimport._read_directory
+
+    def counting(path):
+        nonlocal n
+        n += 1
+        return real(path)
+
+    zipimport._read_directory = counting
+    try:
+        importlib.invalidate_caches()
+    finally:
+        zipimport._read_directory = real
+    return n
+
+
+def test_zip_invalidation_guard_rereads_only_changed_archives(
+    tmp_path, monkeypatch
+):
+    """guard_zip_invalidation: an unchanged archive is not re-read by
+    importlib.invalidate_caches(), a rewritten one is (its new module
+    imports), and on Python >= 3.13 the install changes nothing."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from streamcorpus_filter_spark.operators.quality import (
+        guard_zip_invalidation,
+    )
+
+    zi = zipimport.zipimporter
+    unguarded = getattr(zi.invalidate_caches, "unguarded", zi.invalidate_caches)
+    # undone at teardown, whatever an earlier in-process fence body did
+    monkeypatch.setattr(zi, "invalidate_caches", unguarded)
+    mod = "zipguard_probe_mod"
+    archive = tmp_path / "mods.zip"
+
+    def write(body: str) -> None:
+        with zipfile.ZipFile(archive, "w") as z:
+            z.writestr(f"{mod}.py", body)
+
+    write("X = 1\n")
+    monkeypatch.syspath_prepend(str(archive))
+    monkeypatch.delitem(sys.modules, mod, raising=False)
+    try:
+        assert importlib.import_module(mod).X == 1
+        assert isinstance(sys.path_importer_cache[str(archive)], zi)
+
+        guard_zip_invalidation()
+        guarded = zi.invalidate_caches
+        assert guarded is not unguarded
+        guard_zip_invalidation()  # idempotent
+        assert zi.invalidate_caches is guarded
+        assert _count_rereads() == 0
+
+        write("X = 22  # a different size\n")
+        assert _count_rereads() >= 1
+        del sys.modules[mod]
+        assert importlib.import_module(mod).X == 22
+        assert _count_rereads() == 0
+    finally:
+        sys.modules.pop(mod, None)
+        sys.path_importer_cache.pop(str(archive), None)
+
+    with monkeypatch.context() as m:
+        m.setattr(zi, "invalidate_caches", unguarded)
+        m.setattr(sys, "version_info", (3, 13, 0, "final", 0))
+        guard_zip_invalidation()
+        assert zi.invalidate_caches is unguarded
+
+
+# the workers' entry module (spark.python.worker.module; the name must
+# start with "pyspark"): counts the zip re-reads of each task's set-up
+_ZIPCOUNT_WORKER = r"""
+import importlib, zipimport
+from pyspark import worker
+
+last = None  # re-reads in the latest importlib.invalidate_caches()
+_n = 0
+_read = zipimport._read_directory
+_invalidate = importlib.invalidate_caches
+
+def _counting_read(path):
+    global _n
+    _n += 1
+    return _read(path)
+
+def _counting_invalidate():
+    global _n, last
+    _n = 0
+    _invalidate()
+    last = _n
+
+zipimport._read_directory = _counting_read
+importlib.invalidate_caches = _counting_invalidate
+main = worker.main
+"""
+
+_WORKER_GUARD_SCRIPT = r"""
+import json, sys
+sys.path.insert(0, sys.argv[1])
+import pandas as pd
+import pyspark.sql.functions as F
+from streamcorpus_filter_spark.operators.quality import run_quality_pipeline
+from streamcorpus_filter_spark.session import get_spark
+
+s = get_spark(app_name="zip-guard", master="local[1]", shuffle_partitions=1,
+              extra_conf={"spark.python.worker.module": "pyspark_zipcount"})
+
+@F.pandas_udf("long")
+def setup_rereads(col: pd.Series) -> pd.Series:
+    import pyspark_zipcount
+    return pd.Series([pyspark_zipcount.last] * len(col))
+
+pages = s.createDataFrame([("u", "some text")], "url string, text string")
+run_quality_pipeline(s, pages).collect()
+out = s.range(1).select(setup_rereads("id").alias("n")).collect()[0]["n"]
+print(json.dumps({"rereads": out}))
+s.stop()
+"""
+
+
+def test_fence_worker_skips_unchanged_zip_rereads(tmp_path):
+    """After one pipeline task, the reused Python worker's next task
+    set-up (PySpark's per-task importlib.invalidate_caches()) re-reads
+    no zip archive: pyspark.zip, the py4j zip and the Spark jar sit on
+    its path. local[1] keeps one worker; its own process, because it
+    stops its session."""
+    import json
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    (tmp_path / "pyspark_zipcount.py").write_text(_ZIPCOUNT_WORKER)
+    # the Python workers import the package and the entry module
+    path = os.pathsep.join(
+        filter(None, [str(repo), str(tmp_path), os.environ.get("PYTHONPATH")])
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", _WORKER_GUARD_SCRIPT, str(repo)],
+        capture_output=True, text=True, timeout=600, cwd=tmp_path,
+        env={**os.environ, "PYTHONPATH": path},
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    out = json.loads(r.stdout.strip().splitlines()[-1])
+    assert out == {"rereads": 0}, out

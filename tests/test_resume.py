@@ -598,6 +598,8 @@ def test_batch_plan_round_trip_budget(spark, pages_dir, monkeypatch):
     sent as SQL text.
     The session factory turns the debugging off, and analysis errors
     still name the unresolved column and the candidates."""
+    import threading
+
     import py4j.clientserver as cs
     from pyspark.errors import AnalysisException
 
@@ -606,10 +608,15 @@ def test_batch_plan_round_trip_budget(spark, pages_dir, monkeypatch):
     files = _list_inputs(spark, pages_dir)
     calls = 0
     send = cs.ClientServerConnection.send_command
+    # py4j's finalizer thread releases garbage-collected proxies of
+    # earlier work with its own round trips at times of its choosing
+    # (up to ~200 more in one window); only this thread's calls are the
+    # plan build's
+    me = threading.get_ident()
 
     def counted(self, command):
         nonlocal calls
-        calls += 1
+        calls += threading.get_ident() == me
         return send(self, command)
 
     monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
