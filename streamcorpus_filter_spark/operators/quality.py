@@ -22,6 +22,7 @@ from typing import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 
 from ..kernels import rules
@@ -100,8 +101,12 @@ def guard_zip_invalidation() -> None:
     finding 15). The replacement re-reads only when the archive's
     (dev, inode, size, mtime) differs from its last read, so a rewritten
     archive still reloads. The importers already cached are stamped at
-    install: this task's set-up has just re-read them."""
+    install: this task's set-up has just re-read them. Outside a task
+    (the body called in the driver or a test) nothing is installed:
+    there the caches are of unknown age."""
     if sys.version_info >= (3, 13):  # 3.13 invalidates lazily
+        return
+    if TaskContext.get() is None:
         return
     zi = zipimport.zipimporter
     if hasattr(zi.invalidate_caches, "unguarded"):
@@ -159,8 +164,8 @@ def fused_pipeline_udf(bc_langid, bc_lm, bc_ent_ac, bc_tox_ac, from_html: bool):
 
     @F.pandas_udf(FUSED_STRUCT)
     def fn(col: pd.Series) -> pd.DataFrame:
-        # runs in the Python worker, so its later tasks skip the
-        # per-task zip re-reads
+        # in a Python worker's task, so the worker's later tasks skip
+        # the per-task zip re-reads
         guard_zip_invalidation()
         # the Arrow batch sets the fence crossings, the block the
         # kernels' working set

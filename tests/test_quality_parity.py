@@ -132,7 +132,10 @@ def test_fused_body_caps_each_kernel_call_at_block_rows(spark, monkeypatch):
     automata never see more than KERNEL_BLOCK_ROWS docs in one call (the
     bound on langid's dense count matrices), and the batch's frame is
     exactly the concatenation of the per-block frames. The body runs
-    in-process; the session only has to exist for pandas_udf."""
+    in-process; the session only has to exist for pandas_udf, and the
+    body installs no zip-invalidation guard there."""
+    import zipimport
+
     import pandas as pd
 
     from streamcorpus_filter_spark import models
@@ -168,7 +171,12 @@ def test_fused_body_caps_each_kernel_call_at_block_rows(spark, monkeypatch):
         from_html=True,
     ).func
     col = pd.Series(make_pages(2000, seed=7)["html"], dtype=object)
+    zi = zipimport.zipimporter
+    unguarded = getattr(zi.invalidate_caches, "unguarded", zi.invalidate_caches)
+    monkeypatch.setattr(zi, "invalidate_caches", unguarded)
     got = body(col)
+    # outside a task the body leaves the import system alone
+    assert zi.invalidate_caches is unguarded
     assert len(got) == 2000
     assert {n for n, _ in calls} == {"score_batch", "count_batch", "search_batch"}
     assert max(k for _, k in calls) <= KERNEL_BLOCK_ROWS, calls
@@ -342,7 +350,8 @@ def _count_rereads() -> int:
 def test_zip_invalidation_guard_rereads_only_changed_archives(
     tmp_path, monkeypatch
 ):
-    """guard_zip_invalidation: an unchanged archive is not re-read by
+    """guard_zip_invalidation: outside a task it installs nothing; in
+    one, an unchanged archive is not re-read by
     importlib.invalidate_caches(), a rewritten one is (its new module
     imports), and on Python >= 3.13 the install changes nothing."""
     import importlib
@@ -350,14 +359,21 @@ def test_zip_invalidation_guard_rereads_only_changed_archives(
     import zipfile
     import zipimport
 
+    from pyspark import TaskContext
+
     from streamcorpus_filter_spark.operators.quality import (
         guard_zip_invalidation,
     )
 
     zi = zipimport.zipimporter
     unguarded = getattr(zi.invalidate_caches, "unguarded", zi.invalidate_caches)
-    # undone at teardown, whatever an earlier in-process fence body did
+    # undone at teardown, whatever an earlier install in this process did
     monkeypatch.setattr(zi, "invalidate_caches", unguarded)
+    assert TaskContext.get() is None
+    guard_zip_invalidation()
+    assert zi.invalidate_caches is unguarded
+    # from here on the calls run as if in a worker's task
+    monkeypatch.setattr(TaskContext, "get", lambda: object())
     mod = "zipguard_probe_mod"
     archive = tmp_path / "mods.zip"
 

@@ -593,9 +593,9 @@ def test_empty_input_dir_is_up_to_date_missing_dir_raises(spark, tmp_path):
 def test_batch_plan_round_trip_budget(spark, pages_dir, monkeypatch):
     """Building one batch's plan (pages read through observe) stays
     within a py4j round-trip budget: ~1,000 with Column-builder
-    expressions under PySpark's DataFrame debugging, ~350 with the
-    debugging off, ~165-210 with the cascade and the audit aggregations
-    sent as SQL text.
+    expressions under PySpark's DataFrame debugging, ~340-365 from the
+    building thread with the debugging off, ~155-180 with the cascade
+    and the audit aggregations sent as SQL text.
     The session factory turns the debugging off, and analysis errors
     still name the unresolved column and the candidates."""
     import threading
@@ -622,7 +622,7 @@ def test_batch_plan_round_trip_budget(spark, pages_dir, monkeypatch):
     monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
     _batch_plan(spark, pages_dir, files, from_html=True, parts=["keep", "ds"])
     monkeypatch.undo()
-    assert 0 < calls <= 300
+    assert 0 < calls <= 260
 
     with pytest.raises(AnalysisException) as e:
         spark.range(1).select("nope")
