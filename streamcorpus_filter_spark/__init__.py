@@ -25,6 +25,11 @@ Layout:
     models.py   the trained langid / char-LM / automaton artifacts
     queries.py  the driver-contract registry + the broadcast cache
     oracle.py   row-at-a-time reference-semantics oracle for parity tests
+    _zipguard.py  the Python workers' zip re-read guard, installed below
 """
 
 __version__ = "0.1.0"
+
+from ._zipguard import guard_zip_invalidation
+
+guard_zip_invalidation()  # a no-op outside a Python worker's task

@@ -34,10 +34,6 @@ from .twins import MAX_SHINGLE_DF, TWINNED_SQL, twinned
 
 # ---------------------------------------------------------------- URLs
 
-# tracking-param prefixes stripped by canonicalization (the standard
-# list: UTM campaign tags + bare referral tags)
-_TRACK = ("utm_", "ref")
-
 _URL_SQL = (
     "'HTTPS://WWW.' || source || '.Example.COM/p/' || doc_id "
     "|| '?utm_source=feed&id=' || (doc_id % 7) "

@@ -15,14 +15,10 @@ the row-at-a-time oracle.
 
 from __future__ import annotations
 
-import os
-import sys
-import zipimport
 from typing import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 
 from ..kernels import rules
@@ -81,67 +77,6 @@ FUSED_STRUCT = (
 KERNEL_BLOCK_ROWS = 512
 
 
-def _archive_key(path: str) -> tuple[int, int, int, int] | None:
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    return (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns)
-
-
-def guard_zip_invalidation() -> None:
-    """Makes ``importlib.invalidate_caches()`` skip unchanged zip archives
-    in this process; idempotent, a no-op on Python >= 3.13.
-
-    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
-    of every task, and before 3.13 each cached ``zipimporter`` then
-    re-reads its archive's whole directory: pyspark.zip once per imported
-    pyspark sub-package, the py4j zip and the spark-core jar, about
-    0.25 s per task on ``local[4]`` and up to 0.47 s (BENCH/BASELINE.md
-    finding 15). The replacement re-reads only when the archive's
-    (dev, inode, size, mtime) differs from its last read, so a rewritten
-    archive still reloads. The importers already cached are stamped at
-    install: this task's set-up has just re-read them. Outside a task
-    (the body called in the driver or a test) nothing is installed:
-    there the caches are of unknown age."""
-    if sys.version_info >= (3, 13):  # 3.13 invalidates lazily
-        return
-    if TaskContext.get() is None:
-        return
-    zi = zipimport.zipimporter
-    if hasattr(zi.invalidate_caches, "unguarded"):
-        return
-    reread = zi.invalidate_caches
-    stamps: dict[str, tuple[tuple[int, int, int, int], dict]] = {}
-
-    def stamp(archive: str, key) -> None:
-        files = zipimport._zip_directory_cache.get(archive)
-        if key is None or files is None:
-            stamps.pop(archive, None)
-        else:
-            stamps[archive] = (key, files)
-
-    def invalidate_caches(self) -> None:
-        key = _archive_key(self.archive)
-        seen = stamps.get(self.archive)
-        if (
-            key is not None
-            and seen is not None
-            and seen[0] == key
-            and zipimport._zip_directory_cache.get(self.archive) is seen[1]
-        ):
-            self._files = seen[1]
-            return
-        reread(self)
-        stamp(self.archive, key)
-
-    invalidate_caches.unguarded = reread
-    for imp in list(sys.path_importer_cache.values()):
-        if isinstance(imp, zi):
-            stamp(imp.archive, _archive_key(imp.archive))
-    zi.invalidate_caches = invalidate_caches
-
-
 def fused_pipeline_udf(bc_langid, bc_lm, bc_ent_ac, bc_tox_ac, from_html: bool):
     """THE pipeline fence: one scalar pandas UDF (html|text) -> struct with
     [extract ->] structural rules -> langid + perplexity + entity match +
@@ -164,9 +99,6 @@ def fused_pipeline_udf(bc_langid, bc_lm, bc_ent_ac, bc_tox_ac, from_html: bool):
 
     @F.pandas_udf(FUSED_STRUCT)
     def fn(col: pd.Series) -> pd.DataFrame:
-        # in a Python worker's task, so the worker's later tasks skip
-        # the per-task zip re-reads
-        guard_zip_invalidation()
         # the Arrow batch sets the fence crossings, the block the
         # kernels' working set
         if len(col) <= KERNEL_BLOCK_ROWS:

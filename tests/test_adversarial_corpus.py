@@ -20,7 +20,6 @@ edge handling fails here even though the driver fixture passes.
 from __future__ import annotations
 
 import pathlib
-import tempfile
 
 import duckdb
 import pyarrow as pa
@@ -140,8 +139,8 @@ _LANGS = ["en", "fr", "es", "de", "zh"]
 
 
 @pytest.fixture(scope="module")
-def adv_dir():
-    d = tempfile.mkdtemp(prefix="adv_corpus_")
+def adv_dir(tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("adv_corpus_"))
     rows = {
         "doc_id": list(range(len(_TEXTS))),
         "text": _TEXTS,

@@ -10,7 +10,6 @@ from __future__ import annotations
 import datetime
 import json
 import pathlib
-import tempfile
 
 import duckdb
 import pyarrow as pa
@@ -78,8 +77,8 @@ def _rows():
 
 
 @pytest.fixture(scope="module")
-def adv_dir():
-    d = tempfile.mkdtemp(prefix="adv_evt_")
+def adv_dir(tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("adv_evt_"))
     rows = _rows()
     t = pa.table(
         {

@@ -9,7 +9,6 @@ contract — any other corpus diverges by design)."""
 from __future__ import annotations
 
 import pathlib
-import tempfile
 
 import duckdb
 import numpy as np
@@ -55,8 +54,8 @@ def _vectors() -> list[list[float]]:
 
 
 @pytest.fixture(scope="module")
-def adv_dir():
-    d = tempfile.mkdtemp(prefix="adv_vec_")
+def adv_dir(tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("adv_vec_"))
     vecs = _vectors()
     t = pa.table(
         {

@@ -12,7 +12,6 @@ from __future__ import annotations
 import json
 import pathlib
 import re
-import tempfile
 
 import pytest
 
@@ -45,7 +44,7 @@ def test_only_the_catalog_writes_manifests():
     assert not offenders, "\n".join(offenders)
 
 
-def test_every_verb_writes_one_manifest_shape(spark, monkeypatch):
+def test_every_verb_writes_one_manifest_shape(spark, monkeypatch, tmp_path):
     """Run every manifest-writing verb on one table. Every manifest any
     of them committed, and every manifest left on disk, has the same key
     set, and the sequence numbers are contiguous: each commit claimed the
@@ -65,7 +64,7 @@ def test_every_verb_writes_one_manifest_shape(spark, monkeypatch):
     def df(lo, hi):
         return spark.range(lo, hi).selectExpr("id", "id % 3 AS k")
 
-    c = SnapshotCatalog(tempfile.mkdtemp(prefix="cat_shape_"))
+    c = SnapshotCatalog(str(tmp_path))
     first = c.append(df(0, 10), input_files=["in-0"])
     undone = c.append(df(10, 20), input_files=["in-1"])
     c.rollback_to(first["snapshot_id"])
@@ -355,3 +354,50 @@ def test_query_tables_are_removed_at_exit(tmp_path):
         if p.name.startswith(_SCRATCH_PREFIXES)
     ]
     assert not left, left
+
+
+_ROOT_SCRIPT = r"""
+import os, sys
+sys.path.insert(0, sys.argv[1])
+from streamcorpus_filter_spark.inventory._scratch import scratch_dir
+print(os.path.dirname(scratch_dir("probe_")), flush=True)
+if sys.argv[2] == "kill":
+    os._exit(0)  # no atexit handler runs
+if sys.argv[2] == "hold":
+    sys.stdin.read()  # alive until its stdin closes
+"""
+
+
+def test_dead_process_scratch_root_is_swept_live_one_kept(tmp_path):
+    """A process that leaves through os._exit leaves its scratch root;
+    the next process that makes a root removes it, but not the root of
+    a process that is still alive (its owner's flock decides, not a
+    PID). Subprocesses with their own TMPDIR."""
+    import os
+    import subprocess
+    import sys
+
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+
+    def start(mode: str) -> tuple[subprocess.Popen, pathlib.Path]:
+        p = subprocess.Popen(
+            [sys.executable, "-c", _ROOT_SCRIPT, str(ROOT), mode],
+            stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True, env=env,
+        )
+        return p, pathlib.Path(p.stdout.readline().strip())
+
+    live, live_root = start("hold")
+    try:
+        dead, dead_root = start("kill")
+        assert dead.wait(timeout=60) == 0
+        assert dead_root.is_dir() and live_root.is_dir()
+        sweeper, sweeper_root = start("leave")
+        assert sweeper.wait(timeout=60) == 0
+        assert not dead_root.exists()
+        assert live_root.is_dir() and (live_root / ".owner").is_file()
+        assert not sweeper_root.exists()  # removed at its own exit
+    finally:
+        live.stdin.close()
+        live.wait(timeout=60)
+    assert not live_root.exists()
+    assert dead_root.parent == live_root.parent == tmp_path

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 import threading
 
 import pytest
@@ -18,16 +17,12 @@ def _df(spark, lo, hi):
     return spark.range(lo, hi).selectExpr("id", "id % 3 AS k")
 
 
-def _tmp_root():
-    return tempfile.mkdtemp(prefix="cat_race_")
-
-
-def test_injected_commit_collision_reparents_and_retries(spark, monkeypatch):
+def test_injected_commit_collision_reparents_and_retries(spark, monkeypatch, tmp_path):
     """Deterministic race: a competitor claims the sequence file between
     our writer's latest_snapshot() read and its os.link claim. The writer
     must NOT shadow or overwrite — it must re-read, re-parent onto the
     competitor, and commit the next sequence."""
-    cat = SnapshotCatalog(_tmp_root())
+    cat = SnapshotCatalog(str(tmp_path))
     first = cat.append(_df(spark, 0, 10))
 
     real_link = os.link
@@ -62,10 +57,10 @@ def test_injected_commit_collision_reparents_and_retries(spark, monkeypatch):
     assert not list((cat.root / "snapshots").glob(".tmp-*"))
 
 
-def test_concurrent_threaded_appends_serialize(spark):
+def test_concurrent_threaded_appends_serialize(spark, tmp_path):
     """8 appends from 4 threads: every commit lands, sequences come out
     contiguous, the parent chain is linear, and reads see all rows."""
-    cat = SnapshotCatalog(_tmp_root())
+    cat = SnapshotCatalog(str(tmp_path))
     errs: list[Exception] = []
 
     def writer(base):
@@ -89,11 +84,11 @@ def test_concurrent_threaded_appends_serialize(spark):
     assert not list((cat.root / "snapshots").glob(".tmp-*"))
 
 
-def test_crash_before_manifest_leaves_readers_clean(spark, monkeypatch):
+def test_crash_before_manifest_leaves_readers_clean(spark, monkeypatch, tmp_path):
     """Kill after data files land but before the manifest claim: readers
     must never see the orphaned data, the tmp manifest must not leak, and
     the next append must commit the expected sequence."""
-    cat = SnapshotCatalog(_tmp_root())
+    cat = SnapshotCatalog(str(tmp_path))
     cat.append(_df(spark, 0, 10))
 
     def exploding_link(src, dst, *a, **kw):
@@ -115,10 +110,10 @@ def test_crash_before_manifest_leaves_readers_clean(spark, monkeypatch):
     assert cat.read(spark).count() == 20
 
 
-def test_hard_kill_tmp_litter_is_invisible(spark):
+def test_hard_kill_tmp_litter_is_invisible(spark, tmp_path):
     """A .tmp-* file left by a SIGKILL'd writer (no finally ran) must not
     corrupt the manifest chain or show up in snapshot listings."""
-    cat = SnapshotCatalog(_tmp_root())
+    cat = SnapshotCatalog(str(tmp_path))
     (cat.root / "snapshots" / ".tmp-deadbeef").write_text('{"sequence": 99}')
     cat.append(_df(spark, 0, 10))
     snaps = cat.snapshots()
@@ -126,11 +121,11 @@ def test_hard_kill_tmp_litter_is_invisible(spark):
     assert cat.read(spark).count() == 10
 
 
-def test_resume_is_idempotent_under_duplicated_inputs(spark):
+def test_resume_is_idempotent_under_duplicated_inputs(spark, tmp_path):
     """processed_inputs() is a set union across snapshots: inputs listed
     twice (within a snapshot or across retried runs) count once, and the
     resume anti-join keeps only genuinely new files."""
-    cat = SnapshotCatalog(_tmp_root())
+    cat = SnapshotCatalog(str(tmp_path))
     cat.append(_df(spark, 0, 10), input_files=["a", "b", "a"])
     cat.append(_df(spark, 10, 20), input_files=["b", "c"])
     assert cat.processed_inputs() == {"a", "b", "c"}

@@ -249,20 +249,18 @@ def test_star_rounds_planted_mega_star_and_chain(spark):
     assert 1 not in labels or labels.get(1) == 1
 
 
-def test_cluster_components_long_chain_converges(spark, reg):
+def test_cluster_components_long_chain_converges(spark, reg, tmp_path):
     """A drifting-boilerplate CHAIN (each doc shares a 15-word window
     only with its neighbors: adjacent jaccard ~0.3, skip-1 ~0.0) of
     diameter 25 must converge to ONE component — pointer jumping reaches
     it in O(log d) rounds where plain one-hop propagation would need 25.
     Uses a custom corpus dir to control the graph shape exactly."""
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     words = [f"w{i}" for i in range(800)]
     texts = [" ".join(words[i * 15 : i * 15 + 30]) for i in range(26)]
-    d = tempfile.mkdtemp(prefix="chain_")
+    d = str(tmp_path)
     t = pa.table(
         {
             "doc_id": list(range(1, 27)),  # avoid %10==0 twin noise on 0

@@ -19,6 +19,7 @@ from streamcorpus_filter_spark.synth import (
     TOXIC_LEXICON,
     make_pages,
 )
+from tests.conftest import SF_SMALL
 
 N_PAGES = 1200
 
@@ -132,8 +133,8 @@ def test_fused_body_caps_each_kernel_call_at_block_rows(spark, monkeypatch):
     automata never see more than KERNEL_BLOCK_ROWS docs in one call (the
     bound on langid's dense count matrices), and the batch's frame is
     exactly the concatenation of the per-block frames. The body runs
-    in-process; the session only has to exist for pandas_udf, and the
-    body installs no zip-invalidation guard there."""
+    in-process; the session only has to exist for pandas_udf, and
+    nothing installs the zip-invalidation guard there."""
     import zipimport
 
     import pandas as pd
@@ -361,9 +362,7 @@ def test_zip_invalidation_guard_rereads_only_changed_archives(
 
     from pyspark import TaskContext
 
-    from streamcorpus_filter_spark.operators.quality import (
-        guard_zip_invalidation,
-    )
+    from streamcorpus_filter_spark._zipguard import guard_zip_invalidation
 
     zi = zipimport.zipimporter
     unguarded = getattr(zi.invalidate_caches, "unguarded", zi.invalidate_caches)
@@ -444,6 +443,7 @@ sys.path.insert(0, sys.argv[1])
 import pandas as pd
 import pyspark.sql.functions as F
 from streamcorpus_filter_spark.operators.quality import run_quality_pipeline
+from streamcorpus_filter_spark.queries import QUERIES
 from streamcorpus_filter_spark.session import get_spark
 
 s = get_spark(app_name="zip-guard", master="local[1]", shuffle_partitions=1,
@@ -454,16 +454,22 @@ def setup_rereads(col: pd.Series) -> pd.Series:
     import pyspark_zipcount
     return pd.Series([pyspark_zipcount.last] * len(col))
 
-pages = s.createDataFrame([("u", "some text")], "url string, text string")
-run_quality_pipeline(s, pages).collect()
+case = sys.argv[2]
+if case == "pipeline":
+    pages = s.createDataFrame([("u", "some text")], "url string, text string")
+    run_quality_pipeline(s, pages).collect()
+else:
+    QUERIES[case](s, sys.argv[3]).collect()
 out = s.range(1).select(setup_rereads("id").alias("n")).collect()[0]["n"]
 print(json.dumps({"rereads": out}))
 s.stop()
 """
 
 
-def test_fence_worker_skips_unchanged_zip_rereads(tmp_path):
-    """After one pipeline task, the reused Python worker's next task
+@pytest.mark.parametrize("case", ["pipeline", "ql_langid", "ql_pii_scrub"])
+def test_fence_worker_skips_unchanged_zip_rereads(tmp_path, case):
+    """After a pipeline task, or a query whose UDF imports the package
+    (a pandas_udf, a mapInPandas), the reused Python worker's next task
     set-up (PySpark's per-task importlib.invalidate_caches()) re-reads
     no zip archive: pyspark.zip, the py4j zip and the Spark jar sit on
     its path. local[1] keeps one worker; its own process, because it
@@ -481,7 +487,7 @@ def test_fence_worker_skips_unchanged_zip_rereads(tmp_path):
         filter(None, [str(repo), str(tmp_path), os.environ.get("PYTHONPATH")])
     )
     r = subprocess.run(
-        [sys.executable, "-c", _WORKER_GUARD_SCRIPT, str(repo)],
+        [sys.executable, "-c", _WORKER_GUARD_SCRIPT, str(repo), case, SF_SMALL],
         capture_output=True, text=True, timeout=600, cwd=tmp_path,
         env={**os.environ, "PYTHONPATH": path},
     )

@@ -12,7 +12,6 @@ import pathlib
 import shutil
 import subprocess
 import sys
-import tempfile
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 
@@ -23,8 +22,8 @@ def _spark_submit() -> str:
     return str(pathlib.Path(pyspark.__file__).parent / "bin" / "spark-submit")
 
 
-def test_spark_submit_py_files_zip_end_to_end():
-    work = pathlib.Path(tempfile.mkdtemp(prefix="submit_"))
+def test_spark_submit_py_files_zip_end_to_end(tmp_path):
+    work = tmp_path
 
     # 1. build the zip with the CLI's own packager
     zip_path = work / "scfs.zip"
@@ -94,6 +93,22 @@ def test_get_spark_is_the_only_session_factory():
     assert not offenders, "\n".join(offenders)
 
 
+def test_zipguard_is_the_only_import_system_patch():
+    """Spark-free layering guard: outside _zipguard.py, no program file
+    of the package names zipimport. The zip re-read guard is installed
+    once, at package import; a second patch site would install it where
+    its stamps have no meaning."""
+    pkg = REPO / "streamcorpus_filter_spark"
+    offenders = [
+        f"{p.relative_to(REPO)}:{n}: {line.strip()}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p.name != "_zipguard.py" or p.parent != pkg
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if "zipimport" in line
+    ]
+    assert not offenders, "\n".join(offenders)
+
+
 def test_task_slots_parser():
     from streamcorpus_filter_spark.session import _task_slots
 
@@ -107,14 +122,14 @@ def test_task_slots_parser():
     assert _task_slots("k8s://https://host:443") is None
 
 
-def test_spark_submit_local_cluster_master_honored():
+def test_spark_submit_local_cluster_master_honored(tmp_path):
     """get_spark() must NOT override a spark-submit-provided master: under
     `--master local-cluster[2,2,2048]` the job has to run on 2 separate
     executor JVMs (the north rule's multi-executor launch), not fall back
     to single-JVM local[N]. Regression test for the builder.master()
     override bug; also asserts the post-create shuffle-partition fixup
     (slots=4 -> 8 floor)."""
-    work = pathlib.Path(tempfile.mkdtemp(prefix="submit_lc_"))
+    work = tmp_path
     zip_path = work / "scfs.zip"
     subprocess.run(
         [sys.executable, str(REPO / "run_pipeline.py"), "--make-zip", str(zip_path)],
