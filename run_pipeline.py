@@ -26,18 +26,17 @@ Behavior:
     tests/test_resume.py);
   * runs the fused quality pipeline (extract -> structural -> langid /
     perplexity / entity-match / PII+toxicity scrub -> keep/drop);
-  * records counter metrics (docs seen, langid drops, perplexity
-    drops, patterns matched, bytes scrubbed) via df.observe on the stage
-    write itself — no second pass over the data — and per-input-file
-    lineage from four small columns of the staged files, read on the
-    driver with no Spark job;
+  * counts the batch once, from seven small columns of the staged
+    files read on the driver with no Spark job: the audit totals (docs
+    seen and kept, langid / perplexity / toxicity drops, patterns
+    matched, bytes scrubbed, null urls) and the per-input-file lineage;
   * commits through the catalog's WRITE-AUDIT-PUBLISH gate: the batch
-    lands staged (invisible), the audit checks its own observed metrics
-    (null urls; ``--min-keep-ratio``), and only a clean batch is
-    published — a poisoned batch is aborted with its inputs left
-    re-ingestable, never visible table state; batches left pending by a
-    crashed prior run are settled (re-audited from the durable staged
-    rows) at the start of the next run;
+    lands staged (invisible), the audit checks those totals (null urls;
+    ``--min-keep-ratio``), and only a clean batch is published — a
+    poisoned batch is aborted with its inputs left re-ingestable, never
+    visible table state; batches left pending by a crashed prior run
+    are settled at the start of the next run by the same count and the
+    same decision a live batch goes through;
   * the published snapshot: partitioned parquet + one manifest that
     commits the input files, the metrics and the per-input-file lineage
     (``metrics["lineage"]``: docs_seen, docs_kept, bytes_scrubbed and
@@ -70,64 +69,63 @@ def make_zip(dest: str) -> None:
     print(f"wrote {dest}")
 
 
-def _audit_aggs():
-    """The ONE list of audit aggregation expressions, shared by run()'s
-    live Observation and _settle_pending's re-audit of durable staged
-    rows — two hand-maintained copies drifted once (keep cast long vs
-    string-compare), and a drift here means a batch that aborts live
-    could publish when settled after a crash. The string compare works
-    on BOTH shapes: the pre-write boolean column stringifies to
-    'true'/'false', and the read-back partition-encoded value already
-    IS the string. SQL strings, so each expression is one py4j round
-    trip to build, not one per Column call."""
-    import pyspark.sql.functions as F
-
-    return [F.expr(e) for e in (
-        "count(1) AS docs_seen",
-        "sum(CAST(CAST(keep AS STRING) = 'true' AS BIGINT)) AS docs_kept",
-        "sum(CAST(drop_reason = 'lang_uncertain' AS BIGINT)) AS langid_drops",
-        "sum(CAST(drop_reason = 'high_ppl' AS BIGINT)) AS ppl_drops",
-        "sum(CAST(drop_reason = 'toxic' AS BIGINT)) AS toxic_drops",
-        "sum(CAST(coalesce(patterns_matched, 0) AS BIGINT)) AS patterns_matched",
-        "sum(coalesce(bytes_scrubbed, 0)) AS bytes_scrubbed",
-        "sum(CAST(url IS NULL AS BIGINT)) AS null_urls",
-    )]
+_TOTALS = ("docs_seen", "docs_kept", "langid_drops", "ppl_drops",
+           "toxic_drops", "patterns_matched", "bytes_scrubbed", "null_urls")
 
 
-def _lineage(cat, staged: dict) -> dict:
-    """Per-input-file lineage of a staged batch, for its published
-    manifest: docs_seen, docs_kept, bytes_scrubbed and n_partitions as
-    int lists aligned with the manifest's sorted ``input_files`` (the
-    file names are not repeated); a file that yielded no rows gets
-    zeros. Read on the driver from four small columns of the staged
-    files, with no Spark job — per-file conditional sums in the stage
-    write's own Observation cost 14–20% of the stage at 24 files and
-    more than the whole stage at 256 (BENCH/BASELINE.md finding 12)."""
+def _batch_metrics(cat, staged: dict) -> dict:
+    """A staged batch's audit totals and its per-input-file lineage, for
+    the audit and the published manifest, from one driver read of seven
+    small columns of the staged files (no Spark job; ≤0.4% of the stage,
+    flat in files — BENCH/BASELINE.md finding 12). The lineage
+    (``metrics["lineage"]``) holds docs_seen, docs_kept, bytes_scrubbed
+    and n_partitions as int lists aligned with the manifest's sorted
+    ``input_files`` (the file names are not repeated); a file that
+    yielded no rows gets zeros, and a zero-row batch counts zero."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
     files = staged["input_files"]
-    out = {k: [0] * len(files)
-           for k in ("docs_seen", "docs_kept", "bytes_scrubbed", "n_partitions")}
+    lineage = {k: [0] * len(files)
+               for k in ("docs_seen", "docs_kept", "bytes_scrubbed", "n_partitions")}
     d = ds.dataset(cat._data_dir(staged), format="parquet", partitioning="hive")
-    if not d.files:
-        return out  # a zero-row batch lands as _SUCCESS alone
-    t = d.to_table(columns=["input_file", "keep", "bytes_scrubbed", "partition_id"])
+    if not d.files:  # a zero-row batch lands as _SUCCESS alone
+        return {**dict.fromkeys(_TOTALS, 0), "lineage": lineage}
+    t = d.to_table(columns=["input_file", "keep", "drop_reason", "patterns_matched",
+                            "bytes_scrubbed", "url", "partition_id"])
     # keep is a boolean column, or its partition-encoded string
-    kept = pc.equal(pc.cast(t["keep"], pa.string()), "true").cast(pa.int64())
-    grouped = t.append_column("kept", kept).group_by("input_file").aggregate([
+    t = t.append_column(
+        "kept", pc.equal(pc.cast(t["keep"], pa.string()), "true").cast(pa.int64()))
+
+    def total(values) -> int:
+        return pc.sum(values).as_py() or 0
+
+    def dropped(reason: str) -> int:
+        return total(pc.equal(t["drop_reason"], reason).cast(pa.int64()))
+
+    totals = {
+        "docs_seen": t.num_rows,
+        "docs_kept": total(t["kept"]),
+        "langid_drops": dropped("lang_uncertain"),
+        "ppl_drops": dropped("high_ppl"),
+        "toxic_drops": dropped("toxic"),
+        "patterns_matched": total(t["patterns_matched"]),
+        "bytes_scrubbed": total(t["bytes_scrubbed"]),
+        "null_urls": t["url"].null_count,
+    }
+    grouped = t.group_by("input_file").aggregate([
         ("input_file", "count"), ("kept", "sum"), ("bytes_scrubbed", "sum"),
         ("partition_id", "count_distinct"),
     ])
     index = {f: i for i, f in enumerate(files)}
     for g in grouped.to_pylist():
         i = index[g["input_file"]]  # input_file_name() gives inputFiles()' strings
-        out["docs_seen"][i] = g["input_file_count"]
-        out["docs_kept"][i] = g["kept_sum"]
-        out["bytes_scrubbed"][i] = g["bytes_scrubbed_sum"] or 0
-        out["n_partitions"][i] = g["partition_id_count_distinct"]
-    return out
+        lineage["docs_seen"][i] = g["input_file_count"]
+        lineage["docs_kept"][i] = g["kept_sum"]
+        lineage["bytes_scrubbed"][i] = g["bytes_scrubbed_sum"] or 0
+        lineage["n_partitions"][i] = g["partition_id_count_distinct"]
+    return {**totals, "lineage": lineage}
 
 
 def _read_path(uri: str) -> str:
@@ -151,8 +149,8 @@ def _list_inputs(spark, input_path: str) -> list[str]:
 
 
 def _audit_metrics(metrics: dict, min_keep_ratio: float) -> list[str]:
-    """The WAP audit: decide from the batch's own observed metrics
-    whether it may become visible table state. Violations:
+    """The WAP audit: decide from the batch's own totals whether it may
+    become visible table state. Violations:
       * null_urls — any row lost its key (a corrupted WARC slice);
       * keep_ratio below ``min_keep_ratio`` — a batch the quality rules
         near-uniformly reject is far likelier a poisoned input
@@ -160,74 +158,76 @@ def _audit_metrics(metrics: dict, min_keep_ratio: float) -> list[str]:
     An EMPTY batch is NOT a violation: publishing it records the input
     lineage so --resume won't re-feed the empty files forever."""
     violations = []
-    null_urls = metrics.get("null_urls") or 0
-    if null_urls:
-        violations.append(f"null_urls={null_urls}")
-    seen = metrics.get("docs_seen") or 0
+    if metrics["null_urls"]:
+        violations.append(f"null_urls={metrics['null_urls']}")
+    seen = metrics["docs_seen"]
     if seen and min_keep_ratio > 0:
-        ratio = (metrics.get("docs_kept") or 0) / seen
+        ratio = metrics["docs_kept"] / seen
         if ratio < min_keep_ratio:
             violations.append(f"keep_ratio={ratio:.4f}<{min_keep_ratio}")
     return violations
 
 
-def _batch_rows(spark, cat, manifest: dict):
-    """One committed batch's rows (staged or published), read from its
-    data dir under the manifest schema. The schema makes the read total
-    even for a ZERO-row batch (an empty batch publishes by design so
-    --resume stops re-feeding its files, but Spark writes it as _SUCCESS
-    with no footers — a schemaless read would throw, and settle would
-    retry the throw on every later run forever)."""
-    from pyspark.sql.types import StructType
+def _decide(cat, staged: dict, min_keep_ratio: float):
+    """The WAP decision on one staged ``pipeline_wap`` batch, the same
+    for a live batch and one a crashed run left pending: count it
+    (_batch_metrics), audit it under the threshold its staging run
+    persisted in the staged manifest (``min_keep_ratio`` only for a
+    manifest without one — settling with the NEXT invocation's flag,
+    possibly the 0.0 default of an unrelated cron entry, would publish
+    a batch the run that staged it was about to abort), then publish it
+    with the totals and the lineage in the head's commit, or abort it.
+    Returns the published head (None if aborted), the violations and
+    the metrics."""
+    sid = staged["snapshot_id"]
+    metrics = _batch_metrics(cat, staged)
+    violations = _audit_metrics(
+        metrics, staged["metrics"].get("min_keep_ratio", min_keep_ratio))
+    if not violations:
+        return cat.publish(sid, metrics=metrics), violations, metrics
+    try:
+        cat.abort_staged(sid)
+        return None, violations, metrics
+    except ValueError:
+        # a concurrent run's settle pass already DECIDED this batch (the
+        # catalog verbs converge races to one outcome); report its
+        # decision instead of crashing. With the threshold persisted it
+        # aborts too, but a racer on a manifest without it (or on older
+        # code) may have published: the rows are then visible table
+        # state, not "aborted"
+        return cat._published_head(sid), violations, metrics
 
-    schema = StructType.fromJson(json.loads(manifest["schema_json"]))
-    return spark.read.schema(schema).parquet(cat._data_dir(manifest))
 
-
-def _settle_pending(spark, cat, min_keep_ratio: float) -> list[dict]:
+def _settle_pending(cat, min_keep_ratio: float) -> list[dict]:
     """Finish WAP decisions a crashed prior run left PENDING: a batch
     staged but neither published nor aborted would otherwise stay
     invisible forever while its input lineage blocks --resume from
     re-feeding the files — silent data loss. The staged rows are
-    durable, so the audit and the lineage re-run from THEM, then the
-    idempotent publish/abort lands the decision."""
+    durable, so _decide counts and decides them as the live run would
+    have."""
     settled = []
     for s in cat._staged():
         if "pipeline_wap" not in s.get("metrics", {}):
             continue  # someone else's staged batch: not ours to decide
-        m = _batch_rows(spark, cat, s).select(*_audit_aggs()).first().asDict()
-        # re-audit with the threshold the ORIGINAL run staged the batch
-        # under (it rides in the staged metrics): settling with the
-        # NEXT invocation's flag — possibly the 0.0 default of an
-        # unrelated cron entry — would publish a batch the run that
-        # staged it was about to abort
-        ratio = s["metrics"].get("min_keep_ratio", min_keep_ratio)
-        violations = _audit_metrics(m, ratio)
+        head, violations, _ = _decide(cat, s, min_keep_ratio)
+        entry = {"snapshot": s["snapshot_id"], "decision": "aborted"}
+        if head is not None:
+            entry = {"snapshot": head["snapshot_id"], "decision": "published"}
         if violations:
-            cat.abort_staged(s["snapshot_id"])
-            settled.append({
-                "snapshot": s["snapshot_id"], "decision": "aborted",
-                "violations": violations,
-            })
-        else:
-            head = cat.publish(s["snapshot_id"],
-                               metrics={**m, "lineage": _lineage(cat, s)})
-            settled.append({
-                "snapshot": head["snapshot_id"], "decision": "published",
-            })
+            entry["violations"] = violations
+        settled.append(entry)
     return settled
 
 
 def _batch_plan(spark, input_path: str, todo: list[str], *,
                 from_html: bool, parts: list[str]):
     """The batch's DataFrame over the ``todo`` input files, ready to
-    stage, and the Observation its write fills with _audit_aggs().
+    stage.
 
     Lineage columns come from the scan (input_file_name() is empty after
     an exchange); the pipeline adds no exchange, so partition_id is the
     scan split that read the row."""
     import pyspark.sql.functions as F
-    from pyspark.sql import Observation
 
     from streamcorpus_filter_spark.operators.quality import run_quality_pipeline
 
@@ -243,8 +243,18 @@ def _batch_plan(spark, input_path: str, todo: list[str], *,
     derived = {"partition_id": F.spark_partition_id()}
     if "ds" in parts:
         derived["ds"] = F.to_date("warc_ts")
-    obs = Observation()
-    return out.withColumns(derived).observe(obs, *_audit_aggs()), obs
+    return out.withColumns(derived)
+
+
+def _check_run_args(max_files: int, min_keep_ratio: float) -> None:
+    """Reject run inputs that would silently do the wrong thing: a
+    negative ``max_files`` would slice off the LAST todo files, so a
+    --resume run after it would find nothing to do and leave them
+    never ingested; a keep ratio outside [0, 1] is no threshold."""
+    if max_files < 0:
+        raise ValueError(f"max_files must be >= 0 (0 = no limit), got {max_files}")
+    if not 0.0 <= min_keep_ratio <= 1.0:
+        raise ValueError(f"min_keep_ratio must be in [0, 1], got {min_keep_ratio}")
 
 
 def run(
@@ -263,15 +273,17 @@ def run(
     thin wrapper; tests drive this directly with a shared session.
 
     Every commit goes through the catalog's write-audit-publish gate:
-    the batch lands STAGED (invisible), the audit checks the pipeline's
-    own observed metrics (_audit_metrics), and only then publish() makes
-    it table state — a poisoned batch is aborted with its input files
-    left re-ingestable, never visible to any reader. Pending batches
-    from a crashed prior run are settled first (_settle_pending)."""
+    the batch lands STAGED (invisible), then _decide counts it from the
+    staged files, audits the totals (_audit_metrics), and only a clean
+    batch is published — a poisoned batch is aborted with its input
+    files left re-ingestable, never visible to any reader. Pending
+    batches from a crashed prior run are settled first, by the same
+    _decide (_settle_pending)."""
     from streamcorpus_filter_spark.catalog import SnapshotCatalog
 
+    _check_run_args(max_files, min_keep_ratio)
     cat = SnapshotCatalog(table)
-    settled = _settle_pending(spark, cat, min_keep_ratio)
+    settled = _settle_pending(cat, min_keep_ratio)
 
     # listed with no schema to infer: no Spark job (_list_inputs)
     candidates = _list_inputs(spark, input_path)
@@ -288,61 +300,31 @@ def run(
         return out
 
     parts = [p for p in partition_by.split(",") if p]
-    out, obs = _batch_plan(spark, input_path, todo, from_html=from_html, parts=parts)
-
     # WRITE-AUDIT-PUBLISH (VERDICT r4 task 5): the batch is fully
     # written + committed STAGED (invisible to read()/--resume-as-
-    # published), the audit runs on the observation the stage write
-    # itself populated (no second pass), and only a clean batch is
-    # published. The per-file lineage commits in the published manifest
-    # itself, so no crash window separates a visible batch from its
-    # lineage: a crash before the decision -> the next run's
-    # _settle_pending re-audits the durable staged rows and takes the
-    # lineage from them; abort leaves the inputs re-ingestable (the
+    # published), then decided. The per-file lineage commits in the
+    # published manifest itself, so no crash window separates a visible
+    # batch from its lineage: a crash before the decision -> the next
+    # run's _settle_pending decides the durable staged batch exactly as
+    # this run would have; abort leaves the inputs re-ingestable (the
     # tombstone carries no lineage).
     staged = cat.stage(
-        out, input_files=todo,
+        _batch_plan(spark, input_path, todo, from_html=from_html, parts=parts),
+        input_files=todo,
         # min_keep_ratio rides in the staged manifest so a crash-settle
         # re-audits under THIS run's threshold, not the next caller's
         metrics={"pipeline_wap": True, "min_keep_ratio": min_keep_ratio},
         partition_by=parts or None,
     )
-    metrics = obs.get
-    violations = _audit_metrics(metrics, min_keep_ratio)
-    if violations:
-        head = None
-        try:
-            cat.abort_staged(staged["snapshot_id"])
-        except ValueError:
-            # a concurrent run's settle pass already DECIDED this batch
-            # (the catalog verbs converge races to one outcome); report
-            # its decision instead of crashing. With the threshold
-            # persisted above it aborts too, but a racer on a manifest
-            # without it (or on older code) may have published: the
-            # rows are then visible table state, not "aborted"
-            head = cat._published_head(staged["snapshot_id"])
-        result = {
-            "status": "aborted" if head is None else "committed",
-            "snapshot": None if head is None else head["snapshot_id"],
-            "input_files": len(todo),
-            "violations": violations,
-            "metrics": metrics,
-        }
-        if settled:
-            result["settled"] = settled
-        return result
-
-    # the observed metrics and the lineage ride in the published
-    # head's commit
-    metrics["lineage"] = _lineage(cat, staged)
-    head = cat.publish(staged["snapshot_id"], metrics=metrics)
-
+    head, violations, metrics = _decide(cat, staged, min_keep_ratio)
     result = {
-        "status": "committed",
-        "snapshot": head["snapshot_id"],
+        "status": "aborted" if head is None else "committed",
+        "snapshot": None if head is None else head["snapshot_id"],
         "input_files": len(todo),
         "metrics": metrics,
     }
+    if violations:
+        result["violations"] = violations
     if settled:
         result["settled"] = settled
     return result
@@ -360,7 +342,7 @@ def main() -> None:
                     help="comma-separated output partition columns "
                          "(supports the derived day column 'ds')")
     ap.add_argument("--max-files", type=int, default=0,
-                    help="process at most N input files this run "
+                    help="process at most N input files this run (0: all) "
                          "(crash/kill simulation + controlled backfill)")
     ap.add_argument("--min-keep-ratio", type=float, default=0.0,
                     help="WAP audit threshold: abort (stage-then-discard) "
@@ -377,6 +359,10 @@ def main() -> None:
         return
     if not args.input or not args.table:
         ap.error("--input and --table are required")
+    try:
+        _check_run_args(args.max_files, args.min_keep_ratio)
+    except ValueError as e:
+        ap.error(str(e))
 
     from streamcorpus_filter_spark.session import get_spark
 

@@ -27,15 +27,9 @@ from ..operators.dedup import (
 from ..queries import cached_broadcast, load, register
 
 # shared near-dup planted fixture (twin SQL fragment + Spark twin builder)
-# lives in twins.py so extras.py can import it without a circular chain.
-from .twins import MAX_SHINGLE_DF, TWINNED_SQL  # noqa: E402
-from .twins import twinned as _twinned_impl  # noqa: E402
+from .twins import MAX_SHINGLE_DF, TWINNED_SQL, twinned
 
 _TWINNED = TWINNED_SQL
-
-
-def _twinned(spark: SparkSession, sf: str) -> DataFrame:
-    return _twinned_impl(spark, sf, load)
 
 
 @register(
@@ -86,7 +80,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     """Exact word-3-gram Jaccard near-dup pairs on the twinned corpus,
     with the df > {MAX_SHINGLE_DF} hot-shingle cap active on both engines
     (exact Jaccard over the capped/informative shingle space)."""
-    sh = word_shingles(_twinned(spark, sf), "doc_id", "text", k=3)
+    sh = word_shingles(twinned(spark, sf), "doc_id", "text", k=3)
     return jaccard_pairs(sh, "doc_id", threshold=0.2, max_df=MAX_SHINGLE_DF)
 
 
@@ -133,7 +127,7 @@ def dedup_containment(spark: SparkSession, sf: str) -> DataFrame:
     — containment is directional. The threshold comparison is the exact
     integer cross-multiply inter*10 >= 9*|A| on both engines; only the
     reported score divides (rounded, both engines)."""
-    sh = word_shingles(_twinned(spark, sf), "doc_id", "text", k=3)
+    sh = word_shingles(twinned(spark, sf), "doc_id", "text", k=3)
     keep = (
         sh.groupBy("shingle")
         .agg(F.count("*").alias("_df"))
@@ -385,7 +379,7 @@ def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     verify. Bands make it an equi-join (no cartesian) at any scale.
     Value-checked against the recursive-CTE FNV recomputation in
     _simhash_oracle."""
-    t = _twinned(spark, sf)
+    t = twinned(spark, sf)
     # token-less docs (NULL/empty/whitespace-only text) carry no signal:
     # the oracle's words CTE yields no sig row for them, so they must
     # not enter banding here either — otherwise every such doc gets

@@ -21,9 +21,6 @@ from ._scratch import scratch_dir
 from .twins import MAX_SHINGLE_DF, TWINNED_SQL as _TWINNED, twinned
 
 
-def _twinned(spark: SparkSession, sf: str) -> DataFrame:
-    return twinned(spark, sf, load)
-
 # --------------------------------------------------- dedup clustering
 
 _PAIRS_SQL = f"""
@@ -129,8 +126,8 @@ def dedup_cluster_components(spark: SparkSession, sf: str) -> DataFrame:
     lengths like pointer jumping, so chain diameter converges in
     O(log d) effective rounds too. Converged state = disjoint stars:
     every non-root points straight at its component min."""
-    docs = _twinned(spark, sf).select("doc_id")
-    sh = word_shingles(_twinned(spark, sf), "doc_id", "text", k=3)
+    docs = twinned(spark, sf).select("doc_id")
+    sh = word_shingles(twinned(spark, sf), "doc_id", "text", k=3)
     pairs = jaccard_pairs(sh, "doc_id", threshold=0.2, max_df=MAX_SHINGLE_DF)
     # orient (u > v); jaccard_pairs emits a < b
     edges = pairs.select(F.col("b").alias("u"), F.col("a").alias("v"))

@@ -1,8 +1,8 @@
 """Shared near-dup planted fixture: documents plus truncated twins (first
 40 words) of every 10th doc, with id doc_id + 1_000_000 — reproduced
 identically as a DuckDB SQL fragment and a Spark DataFrame so exact-Jaccard
-pairs are value-checked end to end. Lives in its own module so dedup.py and
-extras.py can both import it without a circular chain through queries.py."""
+pairs are value-checked end to end. Lives in its own module so dedup.py,
+extras.py and webcur.py share one builder."""
 
 from __future__ import annotations
 
@@ -24,9 +24,12 @@ TWINNED_SQL = """
 MAX_SHINGLE_DF = 64
 
 
-def twinned(spark: SparkSession, sf: str, load) -> DataFrame:
-    """Spark form of TWINNED_SQL; `load` is queries.load, passed in to keep
-    this module import-order-neutral."""
+def twinned(spark: SparkSession, sf: str) -> DataFrame:
+    """Spark form of TWINNED_SQL."""
+    # imported here, not at the top: queries imports every inventory
+    # module, and those import this one's constants
+    from ..queries import load
+
     d = load(spark, sf, "documents").select("doc_id", "text")
     toks = F.filter(F.split("text", "[ \\t\\n\\r\\f\\x0B]+"), lambda x: x != "")
     twins = (

@@ -187,7 +187,7 @@ def ql_line_dedup(spark: SparkSession, sf: str) -> DataFrame:
     Guarded by test_line_dedup_has_no_window (zero Window operators in
     the plan). At 10^12 docs the group key becomes xxhash64 of the
     line, 8 bytes, same semantics."""
-    t = twinned(spark, sf, load)
+    t = twinned(spark, sf)
     toks = F.filter(F.split("text", "[ \\t\\n\\r\\f\\x0B]+"), lambda x: x != "")
     base = t.select("doc_id", toks.alias("toks"))
     nline = F.ceil(F.size("toks") / F.lit(float(_LINE_W))).cast("bigint")
@@ -297,7 +297,7 @@ def dedup_keep_first(spark: SparkSession, sf: str) -> DataFrame:
     Full transitive retention (keep one per component) is the
     composition with dedup_cluster_components — this operator is the
     cheap, single-pass policy production crawls default to."""
-    t = twinned(spark, sf, load)
+    t = twinned(spark, sf)
     sh = word_shingles(t, "doc_id", "text", k=3)
     pairs = jaccard_pairs(sh, "doc_id", threshold=_KF_THRESHOLD, max_df=MAX_SHINGLE_DF)
     anc = pairs.groupBy("b").agg(F.min("a").alias("dup_of"))

@@ -16,7 +16,7 @@ def reg():
 
 
 def test_cluster_components_label_planted_twins(spark, reg):
-    from streamcorpus_filter_spark.inventory.dedup import MAX_SHINGLE_DF, _twinned
+    from streamcorpus_filter_spark.inventory.twins import MAX_SHINGLE_DF, twinned
     from streamcorpus_filter_spark.operators.dedup import jaccard_pairs, word_shingles
 
     rows = reg.QUERIES["dedup_cluster_components"](spark, SF_SMALL).collect()
@@ -27,7 +27,7 @@ def test_cluster_components_label_planted_twins(spark, reg):
         assert comp[c] == c
     # every near-dup edge the pair generator emits must have both
     # endpoints under the same label
-    sh = word_shingles(_twinned(spark, SF_SMALL), "doc_id", "text", k=3)
+    sh = word_shingles(twinned(spark, SF_SMALL), "doc_id", "text", k=3)
     pairs = jaccard_pairs(sh, "doc_id", threshold=0.2, max_df=MAX_SHINGLE_DF).collect()
     assert pairs, "fixture plants near-dup twins"
     for p in pairs:

@@ -74,9 +74,13 @@ def test_determinism(spark, pages_dir, tmp_path):
     assert a["metrics"] == b["metrics"]
 
 
-def test_metrics_conservation_and_lineage(spark, pages_dir, tmp_path):
+# "" stores keep as a boolean column; the others as a partition-encoded
+# string, which the staged-file count reads back as text
+@pytest.mark.parametrize("partition_by", ["", "keep", "keep,ds"],
+                         ids=["unpartitioned", "keep", "keep_ds"])
+def test_metrics_conservation_and_lineage(spark, pages_dir, tmp_path, partition_by):
     table = tmp_path / "t"
-    r = run(spark, pages_dir, str(table), from_html=True)
+    r = run(spark, pages_dir, str(table), from_html=True, partition_by=partition_by)
     m = r["metrics"]
     assert m["docs_seen"] == N_PAGES
 
@@ -92,6 +96,14 @@ def test_metrics_conservation_and_lineage(spark, pages_dir, tmp_path):
     assert by_reason.get("lang_uncertain", 0) == m["langid_drops"]
     assert by_reason.get("high_ppl", 0) == m["ppl_drops"]
     assert by_reason.get("toxic", 0) == m["toxic_drops"]
+    recount = out.selectExpr(
+        "CAST(count_if(keep) AS BIGINT) AS docs_kept",
+        "CAST(sum(coalesce(patterns_matched, 0)) AS BIGINT) AS patterns_matched",
+        "CAST(sum(coalesce(bytes_scrubbed, 0)) AS BIGINT) AS bytes_scrubbed",
+        "CAST(count_if(url IS NULL) AS BIGINT) AS null_urls",
+    ).first().asDict()
+    assert recount == {k: m[k] for k in recount}
+    assert m["patterns_matched"] > 0 and m["bytes_scrubbed"] > 0
 
     # manifest carries the observed metrics and the full input-file lineage
     snap = cat.latest_snapshot()
@@ -463,7 +475,11 @@ def test_zero_row_batch_publishes_and_lineage_survives(spark, tmp_path):
     table = str(tmp_path / "t")
     r = run(spark, str(d), table, from_html=True)
     assert r["status"] == "committed"
-    assert r["metrics"]["docs_seen"] == 0
+    # every total counts zero (the stage write's Observation used to
+    # give None for all but docs_seen)
+    assert {k: v for k, v in r["metrics"].items() if k != "lineage"} == dict.fromkeys(
+        ("docs_seen", "docs_kept", "langid_drops", "ppl_drops", "toxic_drops",
+         "patterns_matched", "bytes_scrubbed", "null_urls"), 0)
     cat = SnapshotCatalog(table)
     head = cat.latest_snapshot()
     # the empty file still gets its (all-zero) lineage entry
@@ -549,6 +565,58 @@ def test_batch_launches_two_jobs_and_up_to_date_none(spark, pages_dir, tmp_path)
     assert n == 0
 
 
+def test_settle_launches_no_job(spark, pages_dir, tmp_path, monkeypatch):
+    """Settling a batch a crash left pending counts it from the staged
+    files on the driver: the up-to-date run that settles it launches no
+    Spark job (the Spark re-read of the staged rows made it 2)."""
+    table = str(tmp_path / "t")
+
+    def dying_publish(self, sid, **_kw):
+        raise RuntimeError("simulated crash before the WAP decision")
+
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotCatalog, "publish", dying_publish)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            run(spark, pages_dir, table, from_html=True, partition_by="keep,ds")
+    r, n = _jobs_launched(spark, "batch-settle", lambda: run(
+        spark, pages_dir, table, from_html=True, resume=True))
+    assert r["status"] == "up-to-date"
+    assert r["settled"][0]["decision"] == "published"
+    assert n == 0
+
+
+@pytest.mark.parametrize("kw", [
+    {"max_files": -1}, {"min_keep_ratio": -0.1}, {"min_keep_ratio": 1.5},
+    {"min_keep_ratio": float("nan")},
+])
+def test_out_of_range_run_inputs_are_rejected(spark, pages_dir, tmp_path, kw):
+    """max_files=-1 used to slice off the last input file, so every
+    later --resume run reported up-to-date with that file never
+    ingested; a keep ratio outside [0, 1] is no threshold. Both are
+    rejected before anything is read or written."""
+    table = tmp_path / "t"
+    with pytest.raises(ValueError, match="max_files|min_keep_ratio"):
+        run(spark, pages_dir, str(table), from_html=True, **kw)
+    assert not table.exists()
+
+
+@pytest.mark.parametrize("flag", [["--max-files", "-1"], ["--min-keep-ratio", "2"]])
+def test_cli_rejects_out_of_range_inputs(tmp_path, flag):
+    """The CLI rejects the same values as a usage error, before it
+    starts a Spark session."""
+    import subprocess
+    import sys
+
+    script = pathlib.Path(__file__).resolve().parents[1] / "run_pipeline.py"
+    p = subprocess.run(
+        [sys.executable, str(script), "--input", str(tmp_path / "in"),
+         "--table", str(tmp_path / "t"), *flag],
+        capture_output=True, text=True, timeout=60,
+    )
+    assert p.returncode == 2
+    assert "max_files" in p.stderr or "min_keep_ratio" in p.stderr
+
+
 def _tiny_parquet(path: pathlib.Path) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -591,11 +659,13 @@ def test_empty_input_dir_is_up_to_date_missing_dir_raises(spark, tmp_path):
 
 
 def test_batch_plan_round_trip_budget(spark, pages_dir, monkeypatch):
-    """Building one batch's plan (pages read through observe) stays
-    within a py4j round-trip budget: ~1,000 with Column-builder
+    """Building one batch's plan (pages read through the pipeline)
+    stays within a py4j round-trip budget: ~1,000 with Column-builder
     expressions under PySpark's DataFrame debugging, ~340-365 from the
     building thread with the debugging off, ~155-180 with the cascade
-    and the audit aggregations sent as SQL text.
+    and the audit aggregations sent as SQL text, ~120-145 without the
+    stage write's Observation (the audit totals are counted from the
+    staged files).
     The session factory turns the debugging off, and analysis errors
     still name the unresolved column and the candidates."""
     import threading
