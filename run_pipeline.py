@@ -210,9 +210,8 @@ def _settle_pending(cat, min_keep_ratio: float) -> list[dict]:
         if "pipeline_wap" not in s.get("metrics", {}):
             continue  # someone else's staged batch: not ours to decide
         head, violations, _ = _decide(cat, s, min_keep_ratio)
-        entry = {"snapshot": s["snapshot_id"], "decision": "aborted"}
-        if head is not None:
-            entry = {"snapshot": head["snapshot_id"], "decision": "published"}
+        entry = ({"snapshot": s["snapshot_id"], "decision": "aborted"} if head is None
+                 else {"snapshot": head["snapshot_id"], "decision": "published"})
         if violations:
             entry["violations"] = violations
         settled.append(entry)

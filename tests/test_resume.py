@@ -475,8 +475,7 @@ def test_zero_row_batch_publishes_and_lineage_survives(spark, tmp_path):
     table = str(tmp_path / "t")
     r = run(spark, str(d), table, from_html=True)
     assert r["status"] == "committed"
-    # every total counts zero (the stage write's Observation used to
-    # give None for all but docs_seen)
+    # every total counts zero, as the lineage does
     assert {k: v for k, v in r["metrics"].items() if k != "lineage"} == dict.fromkeys(
         ("docs_seen", "docs_kept", "langid_drops", "ppl_drops", "toxic_drops",
          "patterns_matched", "bytes_scrubbed", "null_urls"), 0)
