@@ -24,6 +24,10 @@ Behavior:
     restarted with --resume processes exactly the remainder — final
     table state is identical to a one-shot run (tested in
     tests/test_resume.py);
+  * reads the batch's input files with the schema Spark inferred
+    earlier in this application from an equal Parquet footer, or infers
+    it (one Spark job) when there is none, so a warm batch launches one
+    Spark job, the stage write (_pages);
   * runs the fused quality pipeline (extract -> structural -> langid /
     perplexity / entity-match / PII+toxicity scrub -> keep/drop);
   * counts the batch once, from seven small columns of the staged
@@ -142,10 +146,74 @@ def _list_inputs(spark, input_path: str) -> list[str]:
     list a plain parquet read of the dir sees (hidden and ``_``-prefixed
     files skipped, partition dirs walked), but under an empty schema:
     no schema-inference Spark job, and an empty dir lists nothing where
-    inference would fail. A missing dir still raises PATH_NOT_FOUND."""
+    inference would fail. A missing dir still raises PATH_NOT_FOUND.
+    The JVM joins the list into one string (a URI holds no newline):
+    iterating the Java array would cost a py4j round trip per file."""
     from pyspark.sql.types import StructType
 
-    return sorted(spark.read.schema(StructType()).parquet(input_path).inputFiles())
+    files = spark.read.schema(StructType()).parquet(input_path)._jdf.inputFiles()
+    joined = spark._jvm.org.apache.hadoop.util.StringUtils.join("\n", files)
+    return sorted(joined.split("\n")) if joined else []
+
+
+def _footer(input_path: str, uri: str):
+    """The Parquet footer of an input file the pages schema can be
+    reused for: its schema and key-value metadata, or None when the file
+    is not local, not under ``input_path``, lies under a ``k=v`` dir
+    (Spark types partition columns from the paths of each read, so a
+    cached schema could type a later value wrongly), or has no readable
+    footer (Spark's inferring read then reports it)."""
+    import os
+    from urllib.parse import urlparse
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src, dst = urlparse(input_path), urlparse(uri)
+    if src.scheme not in ("", "file") or dst.scheme != "file":
+        return None
+    root = unquote(src.path) if src.scheme else input_path
+    path = unquote(dst.path)
+    rel = os.path.relpath(os.path.dirname(path), os.path.abspath(root))
+    if rel.startswith("..") or "=" in rel:
+        return None
+    try:
+        md = pq.read_metadata(path)
+    except (OSError, pa.ArrowException):
+        return None
+    return md.schema, md.metadata
+
+
+def _pages(spark, input_path: str, todo: list[str]):
+    """The pages read of the ``todo`` files. The first read of a footer
+    lets Spark infer the schema (one Spark job); a later read whose files
+    all carry an equal footer is given that schema and launches none.
+    Spark infers the schema from the files' footers (one of them with
+    mergeSchema off), so equal footers give the same schema. The schema
+    is kept for the Spark application, never persisted; a conf that maps
+    Parquet types (spark.sql.parquet.binaryAsString and the like)
+    changed later in the application is not seen."""
+    from streamcorpus_filter_spark.queries import cached
+
+    # basePath keeps directory-encoded partition columns of the input
+    # table visible in the per-file read (a bare leaf-file read drops
+    # them silently — the column would vanish from every output)
+    reader = spark.read.option("basePath", input_path)
+    paths = [_read_path(f) for f in todo]
+    footers = [_footer(input_path, f) for f in todo]
+
+    def same(a, b) -> bool:
+        return (a is not None and b is not None
+                and a[0].equals(b[0]) and a[1] == b[1])
+
+    if not all(same(f, footers[0]) for f in footers):
+        return reader.parquet(*paths)
+    last = cached(spark, "pages_schema", lambda: [None])  # [(footer, schema)]
+    if last[0] is not None and same(last[0][0], footers[0]):
+        return reader.schema(last[0][1]).parquet(*paths)
+    pages = reader.parquet(*paths)
+    last[0] = (footers[0], pages.schema)
+    return pages
 
 
 def _audit_metrics(metrics: dict, min_keep_ratio: float) -> list[str]:
@@ -221,7 +289,9 @@ def _settle_pending(cat, min_keep_ratio: float) -> list[dict]:
 def _batch_plan(spark, input_path: str, todo: list[str], *,
                 from_html: bool, parts: list[str]):
     """The batch's DataFrame over the ``todo`` input files, ready to
-    stage.
+    stage. Building it launches a Spark job only when the pages read
+    must infer its schema (_pages); the fused UDF and the model
+    broadcasts come built from the application's cache.
 
     Lineage columns come from the scan (input_file_name() is empty after
     an exchange); the pipeline adds no exchange, so partition_id is the
@@ -230,14 +300,7 @@ def _batch_plan(spark, input_path: str, todo: list[str], *,
 
     from streamcorpus_filter_spark.operators.quality import run_quality_pipeline
 
-    # basePath keeps directory-encoded partition columns of the input
-    # table visible in the per-file read (a bare leaf-file read drops
-    # them silently — the column would vanish from every output)
-    pages = (
-        spark.read.option("basePath", input_path)
-        .parquet(*[_read_path(f) for f in todo])
-        .withColumn("input_file", F.input_file_name())
-    )
+    pages = _pages(spark, input_path, todo).withColumn("input_file", F.input_file_name())
     out = run_quality_pipeline(spark, pages, extract_from_html=from_html)
     derived = {"partition_id": F.spark_partition_id()}
     if "ds" in parts:

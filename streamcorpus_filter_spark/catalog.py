@@ -657,6 +657,16 @@ class SnapshotCatalog:
             )
         tomb = self._abort_tombstone(staged_snapshot_id, snaps)
         head = self._published_head(staged_snapshot_id, snaps)
+        if s is None and tomb is None and head is None:
+            # the TOCTOU window publish() re-scans for: a racing publish
+            # unlinks the staged manifest after committing its head, and
+            # this scan can miss both. Re-scan once and converge to
+            # whoever won; only a genuinely unknown id is a KeyError.
+            snaps = self.snapshots()
+            tomb = self._abort_tombstone(staged_snapshot_id, snaps)
+            head = self._published_head(staged_snapshot_id, snaps)
+            if tomb is None and head is None:
+                raise KeyError(f"unknown snapshot {staged_snapshot_id!r}")
         if head is not None and (
             tomb is None or head["sequence"] < tomb["sequence"]
         ):
@@ -666,8 +676,6 @@ class SnapshotCatalog:
                 "state; use delete_where instead"
             )
         if tomb is None:
-            if s is None:
-                raise KeyError(f"unknown snapshot {staged_snapshot_id!r}")
             # data_dir EMPTY, not the staged dir: a tombstone is not a
             # data reference — the batch's dir is doomed (so
             # remove_orphan_files may legitimately finish a crashed

@@ -243,18 +243,21 @@ def run_quality_pipeline(
     tasks than its input has splits repartitions ``pages`` itself and
     pays that shuffle explicitly.
     """
-    bc_lang, bc_lm, bc_ent, bc_tox = _broadcast_models(spark)
+    from ..queries import cached
+
+    bcs = _broadcast_models(spark)
+    # built (and pickled, on first use) once per application: a UDF
+    # already built re-applies in 11 py4j round trips, a new one costs 38
+    fused = cached(
+        spark, ("fused_pipeline_udf", *bcs, extract_from_html),
+        lambda: fused_pipeline_udf(*bcs, from_html=extract_from_html),
+    )
 
     in_col = "html" if extract_from_html else "text"
     # every non-payload column (url, warc_ts, lang, plus any caller-added
     # lineage columns like input_file/partition_id) rides through untouched
     passthrough = [c for c in pages.columns if c not in ("html", "text")]
-    enriched = pages.select(
-        *passthrough,
-        fused_pipeline_udf(
-            bc_lang, bc_lm, bc_ent, bc_tox, from_html=extract_from_html
-        )(F.col(in_col)).alias("m"),
-    )
+    enriched = pages.select(*passthrough, fused(F.col(in_col)).alias("m"))
 
     # the cascade as SQL text: the select crosses py4j once plus its
     # argument list, where the Column-builder form crossed once per

@@ -13,7 +13,7 @@ both sides so order-of-summation noise can't break the hash.
 from __future__ import annotations
 
 import threading
-from collections.abc import Callable
+from collections.abc import Callable, Hashable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -43,35 +43,43 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
-_BC_CACHE: dict[tuple[str, str], object] = {}
-_BC_LOCK = threading.Lock()
+_CACHE: dict[tuple[str, Hashable], object] = {}
+_CACHE_LOCK = threading.Lock()
+
+
+def cached(spark: SparkSession, key: Hashable, factory):
+    """factory() memoized per (application, key): the driver-side
+    artifacts a run would otherwise rebuild on every call (broadcasts,
+    the pipeline's fused UDF, the pages schema) are built once per Spark
+    application. The lock stops two threads on a fresh application from
+    building the same artifact twice. The application id is read over
+    py4j once per SparkContext and kept on that object: a stopped
+    context's successor is a new object, so the two still key apart."""
+    sc = spark.sparkContext
+    app = getattr(sc, "_scfs_app_id", None)
+    if app is None:
+        app = sc._scfs_app_id = sc.applicationId
+    k = (app, key)
+    with _CACHE_LOCK:
+        if k not in _CACHE:
+            # PySpark allows one active SparkContext per process, so a new
+            # application id means the old context was stopped: drop its
+            # entries. Never destroy() a broadcast among them — broadcast
+            # ids restart at 0 in the new context and destroy() resolves
+            # the id against the current one, deleting the new
+            # application's same-id broadcast.
+            for old in [x for x in _CACHE if x[0] != app]:
+                del _CACHE[old]
+            _CACHE[k] = factory()
+        return _CACHE[k]
 
 
 def cached_broadcast(spark: SparkSession, key: str, factory):
     """sc.broadcast(factory()) memoized per (application, key): repeated
     query and pipeline invocations reuse one broadcast id instead of
     re-pickling the artifact per call — which also keeps executor-side
-    lazy deserialization warm (it is keyed by broadcast id). The lock
-    stops two threads on a fresh application from broadcasting the same
-    several-MB artifact twice. The application id is read over py4j
-    once per SparkContext and kept on that object: a stopped context's
-    successor is a new object, so the two still key apart."""
-    sc = spark.sparkContext
-    app = getattr(sc, "_scfs_app_id", None)
-    if app is None:
-        app = sc._scfs_app_id = sc.applicationId
-    k = (app, key)
-    with _BC_LOCK:
-        if k not in _BC_CACHE:
-            # PySpark allows one active SparkContext per process, so a new
-            # application id means the old context was stopped: drop its
-            # entries. Never destroy() them — broadcast ids restart at 0 in
-            # the new context and destroy() resolves the id against the
-            # current one, deleting the new application's same-id broadcast.
-            for old in [x for x in _BC_CACHE if x[0] != k[0]]:
-                del _BC_CACHE[old]
-            _BC_CACHE[k] = sc.broadcast(factory())
-        return _BC_CACHE[k]
+    lazy deserialization warm (it is keyed by broadcast id)."""
+    return cached(spark, key, lambda: spark.sparkContext.broadcast(factory()))
 
 
 # --------------------------------------------------------------------------

@@ -254,7 +254,7 @@ def test_catalog_mutations_match_model(spark, ops):
                         continue
                     sid, batch = cands[0]
                     fns = [cat.cherry_pick, cat.cherry_pick]
-                results, errors = [], []
+                results, errors, others = [], [], []
                 barrier = threading.Barrier(2)
 
                 def racer(fn, _sid=sid):
@@ -265,10 +265,15 @@ def test_catalog_mutations_match_model(spark, ops):
                         # losing a race surfaces the documented refusal
                         # (aborted batch / duplicate redo) — converged
                         errors.append(e)
+                    except Exception as e:  # noqa: BLE001 - asserted below
+                        others.append(e)
 
                 ts = [threading.Thread(target=racer, args=(f,)) for f in fns]
                 [t.start() for t in ts]
                 [t.join() for t in ts]
+                # any other exception would only surface as a thread
+                # warning; a racer must converge or refuse
+                assert not others, others
                 snaps = cat.snapshots()
                 heads = [
                     s for s in snaps

@@ -489,6 +489,57 @@ def test_publish_toctou_staged_vanished_surfaces_winner_abort(spark, tmp_path):
     assert sorted(r.id for r in c.read(spark).collect()) == [0, 1]
 
 
+def _stale_first_scan(cat, stale):
+    """Make cat's next snapshots() call return ``stale``, later calls
+    the real listing: the scan that missed a racer's manifests."""
+    real = cat.snapshots
+    calls = []
+
+    def snapshots():
+        calls.append(1)
+        return stale if len(calls) == 1 else real()
+
+    cat.snapshots = snapshots
+
+
+@pytest.mark.parametrize("winner_verb", ["publish", "abort_staged"])
+def test_abort_toctou_staged_vanished_converges_to_winner(
+    spark, tmp_path, winner_verb
+):
+    """abort_staged's first scan misses both the staged manifest (the
+    winner already unlinked it) and the winner's head or tombstone (not
+    yet listed). It must re-scan and converge: a published head is a
+    lost abort (ValueError, the head stays visible); a tombstone is a won
+    abort (its cleanup runs, the batch stays invisible). It used to raise
+    KeyError."""
+    c = SnapshotCatalog(str(tmp_path / "tbl"))
+    winner = SnapshotCatalog(str(tmp_path / "tbl"))
+    c.append(_df(spark, 0, 2))
+    stale = c.snapshots()
+    sid = c.stage(_df(spark, 2, 4))["snapshot_id"]
+    getattr(winner, winner_verb)(sid)
+
+    _stale_first_scan(c, stale)
+    if winner_verb == "publish":
+        with pytest.raises(ValueError, match="already published"):
+            c.abort_staged(sid)
+        assert sorted(r.id for r in c.read(spark).collect()) == [0, 1, 2, 3]
+    else:
+        c.abort_staged(sid)
+        assert sorted(r.id for r in c.read(spark).collect()) == [0, 1]
+        assert len([s for s in c.snapshots()
+                    if s.get("operation") == "abort"]) == 1
+
+
+def test_abort_unknown_id_still_raises_keyerror(spark, tmp_path):
+    """The re-scan must not swallow a caller error: an abort of an id no
+    snapshot ever carried stays a KeyError."""
+    c = SnapshotCatalog(str(tmp_path / "tbl"))
+    c.append(_df(spark, 0, 2))
+    with pytest.raises(KeyError, match="unknown snapshot"):
+        c.abort_staged("never-existed-0000")
+
+
 def test_publish_unknown_id_still_raises_keyerror(spark, tmp_path):
     """The TOCTOU healing must not swallow genuine caller errors: a
     publish of an id no snapshot ever carried stays a KeyError."""

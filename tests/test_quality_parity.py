@@ -262,14 +262,17 @@ _APP_ID_SCRIPT = r"""
 import json, sys
 sys.path.insert(0, sys.argv[1])
 from py4j import clientserver as cs
+import pyspark.core.rdd as rdd
 from pyspark import SparkContext
 from streamcorpus_filter_spark.kernels.langid import LangIdModel
 from streamcorpus_filter_spark.operators.quality import run_quality_pipeline
 from streamcorpus_filter_spark.session import get_spark
 
-counts = {"app_id": 0, "langid": 0}
+counts = {"app_id": 0, "langid": 0, "udf": 0}
+langid_jvm, udf_jvm = [], []
 _send = cs.ClientServerConnection.send_command
 _broadcast = SparkContext.broadcast
+_prepare = rdd._prepare_for_python_RDD
 
 def counting_send(self, command):
     # a py4j method call is "c\n<target>\n<method>\n..."
@@ -277,11 +280,23 @@ def counting_send(self, command):
     return _send(self, command)
 
 def counting_broadcast(self, value):
-    counts["langid"] += isinstance(value, LangIdModel)
-    return _broadcast(self, value)
+    b = _broadcast(self, value)
+    if isinstance(value, LangIdModel):
+        counts["langid"] += 1
+        langid_jvm.append(b._jbroadcast._target_id)
+    return b
+
+def counting_prepare(sc, command):
+    # every Python UDF's function is pickled here, with the JVM handles
+    # of the broadcasts its closure holds
+    out = _prepare(sc, command)
+    counts["udf"] += 1
+    udf_jvm.append({jb._target_id for jb in out[1]})
+    return out
 
 cs.ClientServerConnection.send_command = counting_send
 SparkContext.broadcast = counting_broadcast
+rdd._prepare_for_python_RDD = counting_prepare
 
 def pipeline_call(s, pages):
     before = dict(counts)
@@ -297,18 +312,20 @@ first, second = pipeline_call(s, pages), pipeline_call(s, pages)
 s.stop()
 s, pages = session()
 fresh = pipeline_call(s, pages)
-print(json.dumps({"first": first, "second": second, "fresh": fresh}))
+own = langid_jvm[-1] in udf_jvm[-1] and langid_jvm[0] not in udf_jvm[-1]
+print(json.dumps({"first": first, "second": second, "fresh": fresh, "own": own}))
 s.stop()
 """
 
 
 def test_application_id_is_read_once_per_context(tmp_path):
-    """cached_broadcast reads the application id over py4j once per
+    """queries.cached reads the application id over py4j once per
     SparkContext: a second run_quality_pipeline call in the same
-    application makes no applicationId JVM call and broadcasts nothing,
-    while a new context after spark.stop() reads its own id and
-    broadcasts the models afresh. Runs in its own process: it stops its
-    session, which would kill the suite's shared one."""
+    application makes no applicationId JVM call, broadcasts nothing and
+    pickles no new fused UDF, while a new context after spark.stop()
+    reads its own id, broadcasts the models afresh and builds the UDF
+    afresh on those new broadcasts. Runs in its own process: it stops
+    its session, which would kill the suite's shared one."""
     import json
     import pathlib
     import subprocess
@@ -321,9 +338,10 @@ def test_application_id_is_read_once_per_context(tmp_path):
     )
     assert r.returncode == 0, r.stderr[-3000:]
     out = json.loads(r.stdout.strip().splitlines()[-1])
-    assert out["first"] == {"app_id": 1, "langid": 1}, out
-    assert out["second"] == {"app_id": 0, "langid": 0}, out
-    assert out["fresh"] == {"app_id": 1, "langid": 1}, out
+    assert out["first"] == {"app_id": 1, "langid": 1, "udf": 1}, out
+    assert out["second"] == {"app_id": 0, "langid": 0, "udf": 0}, out
+    assert out["fresh"] == {"app_id": 1, "langid": 1, "udf": 1}, out
+    assert out["own"], out
 
 
 def _count_rereads() -> int:
